@@ -63,4 +63,15 @@ object ScopedSessionConf {
     withShufflePartitions(s, n) {
       withConf(s, "spark.sql.adaptive.enabled", "false")(f)
     }
+
+  /** [[withMetaConf]] for work that may run on a HELPER thread of a
+    * window another thread holds (the streaming batch shape: store
+    * merges overlapped in futures inside the batch's scope, awaited by
+    * the lock holder — blocking on the lock would deadlock). When the
+    * lock is held elsewhere `f` runs unscoped, under that window's
+    * conf; otherwise (free, or held by this thread) it is
+    * [[withMetaConf]]. Reads the lock state without blocking. */
+  def withMetaConfUnlessHeldElsewhere[T](s: SparkSession, n: Int)(f: => T): T =
+    if (lock.isLocked && !lock.isHeldByCurrentThread) f
+    else withMetaConf(s, n)(f)
 }

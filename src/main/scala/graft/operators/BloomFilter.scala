@@ -88,7 +88,7 @@ object BloomFilter {
 
   /** The benchmark-side bitmap as a persistable artifact: one
     * (bitmap array<long>) row over the benchmark's distinct shingles —
-    * built once at write time ([[ArtifactStore.publish]]), probed by
+    * built once at write time ([[MergeUpsert.publishPlain]]), probed by
     * every contamination scan ([[flagBloomWith]]). The benchmark
     * corpus changes rarely; the scanned corpus changes constantly —
     * exactly the asymmetry a stored artifact exploits. */

@@ -242,6 +242,15 @@ object MergeUpsert {
   def existingPlain(spark: SparkSession, path: String): Option[DataFrame] =
     resolveBase(spark, path)._3
 
+  /** The live version and the contents read from THAT version's dir
+    * (or a legacy flat store, whose version is None) — the pinned base
+    * a composed publish passes to [[publishPlainFrom]]. */
+  private[operators] def pinnedPlain(spark: SparkSession, path: String)
+      : (Option[String], Option[DataFrame]) = {
+    val (cur, _, base) = resolveBase(spark, path)
+    (cur, base)
+  }
+
   /** Atomic full-table publish: write `df` as a new immutable version
     * and flip the `_CURRENT` pointer — the whole-table-replace analogue
     * of [[mergeWritePlain]] (no key merge; the previous contents are

@@ -199,7 +199,7 @@ object Similarity {
       nProbe, roundTo)
 
   /** [[ivfTopK]]'s probe half against PRE-TRAINED centroids
-    * ((cid, cvec), e.g. [[ArtifactStore.load]]) — the read path once
+    * ((cid, cvec), e.g. [[MergeUpsert.readPlain]]) — the read path once
     * training has moved to write time. Same rounding and tiebreaks as
     * the train-in-query form; x115 oracle-proves the equivalence. */
   def ivfTopKWith(queries: DataFrame, corpus: DataFrame,
@@ -584,7 +584,7 @@ object Similarity {
 
   /** The PQ codebooks as a persistable artifact: (subspace, cid, cvec),
     * one [[kmeansCentroids]] codebook per contiguous subspace — what
-    * [[ArtifactStore.publish]] stores at write time and [[pqTopKWith]]
+    * [[MergeUpsert.publishPlain]] stores at write time and [[pqTopKWith]]
     * probes at read time. Same training as [[pqTopK]]'s in-query path
     * (same seeds, rounding, tiebreaks). */
   def pqCodebooks(corpus: DataFrame, idCol: String, vecCol: String,

@@ -14,8 +14,9 @@ import org.apache.spark.sql.functions._
   * One row per data file: (file, part, rows, key lo/hi) — the zone-map
   * stats (x140) keyed by file, published through the same atomic
   * `_CURRENT`-pointer protocol as every other store in this engine
-  * ([[MergeUpsert.publishPlain]] on `path/_manifest`; the underscore
-  * prefix keeps it invisible to plain parquet readers of `path`).
+  * ([[MergeUpsert]]'s versioned plain store on `path/_manifest`; the
+  * underscore prefix keeps it invisible to plain parquet readers of
+  * `path`).
   * Maintenance is O(touched): after a merge rewrites k partitions, only
   * those partitions' NEW files are scanned and their rows replaced; the
   * publish is the same pointer flip the data itself gets.
@@ -33,6 +34,22 @@ import org.apache.spark.sql.functions._
   * generations; every read must plan from the manifest
   * ([[readViaManifest]] / [[readPartitions]] / [[lookup]]), exactly
   * Delta's contract for its log.
+  *
+  * ONE COMMIT: the five writers — [[update]], [[mergeWriteManifested]],
+  * [[appendManifested]], [[replacePartitions]], [[compactManifested]] —
+  * each add only their own data step to the same private `commit`:
+  *  1. pin the manifest base version and read its contents from that
+  *     version's own path (`pin`);
+  *  2. list the landing partition dirs before and after the data write
+  *     — the difference is exactly the new files, no committer hook;
+  *  3. compute the new files' manifest rows (`statsForFiles`);
+  *  4. drop the replaced partitions and files from the pinned manifest;
+  *  5. publish ONE manifest file through the flip guarded against the
+  *     pinned version, inside the metadata window.
+  * A concurrent publish since the pin is refused at the flip
+  * (ConcurrentModificationException); a crash anywhere before the flip
+  * leaves unreferenced files that no reader sees and [[vacuum]]
+  * reclaims. The seam between steps 2 and 3 is where both land.
   *
   * Reference: the reference stores rows in Postgres where point
   * lookups ride a B-tree (`backend/app/main.py:110-373`); at 100 TB the
@@ -93,23 +110,32 @@ object TableManifest {
       org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
         .escapePathName(v.toString)
 
-  /** The given partition values' current on-disk parquet files —
-    * k LIST calls against the partition DIRS (absent dirs contribute
-    * nothing), never a recursive root listing. The before/after pair
-    * of these listings around a copy-on-write append is how the new
-    * files are identified without any committer hook. */
+  /** The given partition values' current on-disk parquet files, with
+    * their byte lengths — k LIST calls against the partition DIRS
+    * (absent dirs contribute nothing), never a recursive root listing.
+    * The before/after pair of these listings around a copy-on-write
+    * append is how the new files are identified without any committer
+    * hook. */
   private def listPartFiles(spark: SparkSession, path: String,
                             partitionCol: String,
-                            parts: Seq[Any]): Set[String] = {
+                            parts: Seq[Any]): Map[String, Long] = {
     val fs = MergeUpsert.fsFor(spark, path)
     parts.flatMap { v =>
       val d = new org.apache.hadoop.fs.Path(partDir(path, partitionCol, v))
-      if (!fs.exists(d)) Seq.empty[String]
+      if (!fs.exists(d)) Seq.empty
       else fs.listStatus(d).toIndexedSeq
         .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
-        .map(_.getPath.toString)
-    }.toSet
+        .map(st => st.getPath.toString -> st.getLen)
+    }.toMap
   }
+
+  /** On-disk parquet bytes under the given partitions' dirs — the
+    * output-sizing input of a fold (metadata only: superseded
+    * copy-on-write generations still on disk overcount by at most the
+    * retention factor, which only rounds a file-count target up). */
+  def partitionBytes(spark: SparkSession, path: String,
+                     partitionCol: String, parts: Seq[Any]): Long =
+    listPartFiles(spark, path, partitionCol, parts).values.sum
 
   /** Per-file KEY-BLOOM sizing (the `key_bloom` manifest column an
     * epoch-partitioned keyed store opts into via `bloomKeys`): 32 bits
@@ -182,24 +208,100 @@ object TableManifest {
     }
   }
 
-  /** Scan the given partition values' files and compute one manifest
-    * row per file. O(touched partitions), not O(table). */
-  private def statsFor(spark: SparkSession, path: String,
-                       partitionCol: String, parts: Seq[Any],
-                       keyCol: String): DataFrame =
-    // the partition DIRS are addressed directly (basePath keeps the
-    // partition column) — listing touches k dirs, never the table root
-    // recursively, so maintenance stays O(touched) in LIST calls too.
-    // Partition VALUES are escaped exactly as the writer escaped them
-    // (Spark's Hive-style partition-path escaping) so values with
-    // reserved chars (':', '%', '#', …) address the real dir.
-    spark.read.option("basePath", path)
-      .parquet(parts.map(v => partDir(path, partitionCol, v)): _*)
-      .groupBy(decodeUri(input_file_name()).as("file"),
-        col(partitionCol).cast("string").as("part"))
-      .agg(count(lit(1)).as("rows"),
-        min(col(keyCol)).cast("string").as("key_lo"),
-        max(col(keyCol)).cast("string").as("key_hi"))
+  /** The manifest version a writer plans from, and that version's
+    * contents (None/None before the first publish; a legacy flat
+    * manifest has contents but no version, so no guard is possible). */
+  private final case class Pinned(version: Option[String],
+                                  manifest: Option[DataFrame])
+
+  /** Pin the manifest base FIRST, with the contents read explicitly
+    * from THAT version's path (r14 advice): reading the live manifest
+    * and the pointer separately left a window where a concurrent
+    * publish landing between the two paired stale contents with the
+    * new pointer — the flip guard passed and the new manifest silently
+    * unreferenced the interleaver's files. */
+  private def pin(spark: SparkSession, path: String): Pinned = {
+    val (v, m) = MergeUpsert.pinnedPlain(spark, manifestPath(path))
+    Pinned(v, m)
+  }
+
+  /** Test seam on [[commit]], called with the table path after the
+    * data write and before the manifest publish — where a concurrent
+    * writer's flip or a crash lands. A no-op outside the specs. */
+  @volatile private[operators] var beforePublish: String => Unit = _ => ()
+
+  /** The copy-on-write commit every writer ends in (see the object
+    * scaladoc): `write` lands the writer's data under the `landing`
+    * partitions; the files it added (every file found there, with
+    * `registerExisting` — [[update]]'s bootstrap rescan) are
+    * registered, `dropParts`/`dropFiles` leave the pinned manifest, and
+    * one manifest version is published against `base.version`.
+    *
+    * Nothing landed and nothing dropped publishes nothing — an empty
+    * batch into an epoch store is a no-op, not a version bump per tick
+    * (the drop probe is one limit(1) over the tiny manifest, run only
+    * when there is something to drop).
+    *
+    * The metadata window is skipped when another thread holds a scoped
+    * window ([[graft.ScopedSessionConf.withMetaConfUnlessHeldElsewhere]]):
+    * StreamCuration's store merges commit from helper threads of its
+    * batch window, which already runs at micro sizing. */
+  private def commit[T](spark: SparkSession, path: String, base: Pinned,
+                        partitionCol: String, landing: Seq[Any],
+                        zoneKey: String, retainVersions: Int,
+                        dropParts: Seq[Any] = Nil,
+                        dropFiles: Seq[String] = Nil,
+                        bloomKeys: Option[Seq[String]] = None,
+                        registerExisting: Boolean = false)
+                       (write: => T): T = {
+    val before =
+      if (registerExisting) Set.empty[String]
+      else listPartFiles(spark, path, partitionCol, landing).keySet
+    val out = write
+    val newFiles =
+      (listPartFiles(spark, path, partitionCol, landing).keySet -- before)
+        .toSeq
+    beforePublish(path)
+    // manifest maintenance is METADATA-scale always (rows = file
+    // count, bounded by MaxPlanFiles) — its stats agg and publish
+    // write must not inherit the session's data-sized shuffle count
+    // (measured ~0.3 s/publish of pure tiny-task overhead at 32) nor
+    // AQE (every exchange = one query-stage JOB of scheduler latency;
+    // JobCount r17: 60-80% of each protocol row's jobs)
+    graft.ScopedSessionConf.withMetaConfUnlessHeldElsewhere(spark, 4) {
+      // `dropFiles` drops SPECIFIC superseded files (the epoch stores'
+      // per-file steal rewrite — file granularity, so a fired bloom
+      // never forces a whole-partition rewrite); strings match exactly
+      // because callers take them from this manifest's rows
+      def isIn(c: String, vs: Seq[String]) =
+        if (vs.isEmpty) lit(false) else col(c).isin(vs: _*)
+      val drops = dropParts.nonEmpty || dropFiles.nonEmpty
+      val dropped = isIn("part", dropParts.map(_.toString)) ||
+        isIn("file", dropFiles)
+      val kept = base.manifest.map(m => if (drops) m.filter(!dropped) else m)
+      val fresh =
+        if (newFiles.isEmpty) None
+        else Some(statsForFiles(spark, path, newFiles, partitionCol, zoneKey,
+          bloomKeys))
+      def dropsAnything = drops &&
+        base.manifest.exists(m => !m.filter(dropped).limit(1).isEmpty)
+      val next = (kept, fresh) match {
+        case (Some(k), Some(f)) => Some(k.unionByName(f))
+        case (Some(k), None) => if (dropsAnything) Some(k) else None
+        case (None, f) => f
+      }
+      // coalesce(1): a manifest version is metadata (one row per data
+      // file) and is re-read/collected on EVERY subsequent store read
+      // and probe — one file per version beats shuffle-partition-many
+      // KB-sized files at streaming cadence (r17; a 1e6-row manifest is
+      // still a single ~50 MB task, maintenance-scale)
+      next.foreach { m =>
+        MergeUpsert.publishPlainFrom(spark, manifestPath(path),
+          m.coalesce(1), retainVersions, base.version)
+      }
+    }
+    out
+  }
 
   /** (Re)build manifest rows for `touched` partitions from a FULL
     * rescan of those partitions' dirs, and publish the merged manifest
@@ -213,17 +315,9 @@ object TableManifest {
     * exactly the files it wrote. */
   def update(spark: SparkSession, path: String, partitionCol: String,
              touched: Seq[Any], keyCol: String,
-             retainVersions: Int = 2): Unit = {
-    val fresh = statsFor(spark, path, partitionCol, touched, keyCol)
-    val parts = touched.map(_.toString)
-    val merged = load(spark, path) match {
-      case None => fresh
-      case Some(old) => old.filter(!col("part").isin(parts: _*))
-        .unionByName(fresh)
-    }
-    MergeUpsert.publishPlain(spark, manifestPath(path), merged,
-      retainVersions)
-  }
+             retainVersions: Int = 2): Unit =
+    commit(spark, path, pin(spark, path), partitionCol, touched, keyCol,
+      retainVersions, dropParts = touched, registerExisting = true)(())
 
   /** The live manifest, or None before the first [[update]]. */
   def load(spark: SparkSession, path: String): Option[DataFrame] =
@@ -283,68 +377,32 @@ object TableManifest {
                            updates: DataFrame, keys: Seq[String],
                            partitionCol: String = "date",
                            zoneKey: Option[String] = None,
-                           retainVersions: Int = 2,
-                           beforeManifestPublish: () => Unit = () => ())
+                           retainVersions: Int = 2)
       : MergeUpsert.MergeWriteReport = {
-    // the manifest version this merge PLANS from, captured before any
-    // work: the final manifest flip is guarded against it, so a second
-    // manifested writer interleaving anywhere in the merge+append span
-    // is refused at the flip instead of silently unreferencing the
-    // other writer's publish (its own appended data files stay
-    // unreferenced orphans, reclaimed by vacuum) — the two-writer spec
-    // interleaves through the beforeManifestPublish seam.
-    val mBase = MergeUpsert.currentPlainVersion(spark, manifestPath(path))
+    // the base is pinned before any work, so a second manifested writer
+    // interleaving anywhere in the merge+append span is refused at the
+    // flip instead of silently unreferencing the other writer's publish
+    val base = pin(spark, path)
     // ONE stats pass serves this layer's touched-partition bookkeeping
     // AND mergeWrite's broadcast decision (it would otherwise re-scan
     // the batch for the same numbers — one whole Spark job per merge
     // at streaming cadence)
     val stats @ (touched, _) =
       MergeUpsert.batchStats(updates, keys, partitionCol)
-    val existing = load(spark, path)
     // when a manifest already exists, the merge's existing-rows read
     // plans from it; new partitions simply resolve to no files
-    val resolver = existing.map { m => (ts: Seq[Any]) =>
+    val resolver = base.manifest.map { m => (ts: Seq[Any]) =>
       readFiles(spark, path, m,
         keptFiles(m, ts.map(_.toString)).toIndexedSeq)
     }
-    val before = listPartFiles(spark, path, partitionCol, touched)
-    val report = MergeUpsert.mergeWrite(spark, path, updates, keys,
-      partitionCol, listingVia = resolver, cow = true,
-      precomputedStats = Some(stats))
-    val newFiles =
-      (listPartFiles(spark, path, partitionCol, touched) -- before).toSeq
-    beforeManifestPublish()
-    if (newFiles.nonEmpty) {
-      // manifest maintenance is METADATA-scale always (rows = file
-      // count, bounded by MaxPlanFiles) — its stats agg and publish
-      // write must not inherit the session's data-sized shuffle count
-      // (measured ~0.3 s/publish of pure tiny-task overhead at 32) nor
-      // AQE (every exchange = one query-stage JOB of scheduler latency;
-      // JobCount r17: 60-80% of each protocol row's jobs)
-      graft.ScopedSessionConf.withMetaConf(spark, 4) {
-        val fresh = statsForFiles(spark, path, newFiles, partitionCol,
-          zoneKey.getOrElse(keys.head))
-        val parts = touched.map(_.toString)
-        val merged = existing match {
-          case None => fresh
-          case Some(old) => old.filter(!col("part").isin(parts: _*))
-            .unionByName(fresh)
-        }
-        // one file per manifest version (see replacePartitions)
-        MergeUpsert.publishPlainFrom(spark, manifestPath(path),
-          merged.coalesce(1), retainVersions, mBase)
-      }
+    commit(spark, path, base, partitionCol, touched,
+      zoneKey.getOrElse(keys.head), retainVersions, dropParts = touched) {
+      MergeUpsert.mergeWrite(spark, path, updates, keys,
+        partitionCol, listingVia = resolver, cow = true,
+        precomputedStats = Some(stats))
     }
-    report
   }
 
-  /** Out-of-band APPEND with exact manifest registration: writes `df`
-    * as new files (no merge semantics — the caller owns key
-    * uniqueness) and registers EXACTLY the files it wrote, leaving
-    * every existing manifest row in place. This is the safe form of
-    * "external writer lands data on a live table": unlike [[update]]'s
-    * dir rescan it cannot resurrect superseded copy-on-write files,
-    * because it never looks at files it didn't just create. */
   /** Wholesale COPY-ON-WRITE replacement of a PARTITION SET's
     * contents: `df` (whose rows must all fall in `replaceParts` — the
     * caller owns that containment) is appended as new immutable files,
@@ -356,31 +414,24 @@ object TableManifest {
     * one fresh epoch, while unpublished epochs above the fold keep
     * accumulating). The superseded generation stays on disk for
     * retained-version readers ([[readVersion]]) until [[vacuum]].
-    * Same interleave guard as [[mergeWriteManifested]]: the manifest
-    * base is pinned first, so a concurrent publish is refused at the
-    * flip and this call's appended files stay vacuumable orphans. */
-  /** `scopedMeta = false` skips the manifest publish's internal
-    * [[graft.ScopedSessionConf]] window: that window rides a global
-    * re-entrant lock, so a caller invoking this from a HELPER THREAD
-    * while the session's owning thread holds a scoped window (the
-    * streaming batch shape: store merges overlapped in futures inside
-    * the batch's shuffle-sizing scope) would deadlock — such callers
-    * already run the whole batch at micro sizing, so the inner window
-    * is redundant for them anyway. */
+    * Same interleave guard as every writer here: a concurrent publish
+    * is refused at the flip and this call's appended files stay
+    * vacuumable orphans.
+    *
+    * The first write BOOTSTRAPS (no manifest yet → nothing to drop):
+    * replacePartitions doubles as the idempotent "this partition's
+    * contents ARE this frame" writer (StreamCuration's epoch inserts).
+    * `replaceFiles` additionally drops specific files of other
+    * partitions (the epoch stores' per-file steal rewrite). An empty
+    * `df` that drops nothing publishes nothing. */
   def replacePartitions(spark: SparkSession, path: String, df: DataFrame,
                         keyCol: String, partitionCol: String,
                         replaceParts: Seq[Any],
                         retainVersions: Int = 2,
                         landingParts: Option[Seq[Any]] = None,
                         replaceFiles: Seq[String] = Nil,
-                        bloomKeys: Option[Seq[String]] = None,
-                        scopedMeta: Boolean = true): Unit = {
-    val mBase = MergeUpsert.currentPlainVersion(spark, manifestPath(path))
-    // first write BOOTSTRAPS (no manifest yet → nothing to drop):
-    // replacePartitions doubles as the idempotent "this partition's
-    // contents ARE this frame" writer (StreamCuration's epoch inserts)
-    val m = mBase.map(v => spark.read.parquet(s"${manifestPath(path)}/$v"))
-      .orElse(load(spark, path))
+                        bloomKeys: Option[Seq[String]] = None): Unit = {
+    val base = pin(spark, path)
     // only the dirs receiving NEW files need the before/after listing;
     // the dropped partitions are removed from the manifest by name.
     // Callers that KNOW df's partition set pass it via `landingParts`
@@ -390,62 +441,16 @@ object TableManifest {
     // paid twice — once for this distinct-collect, once writing).
     val landing = landingParts.getOrElse(
       df.select(col(partitionCol)).distinct().collect().map(_.get(0)).toSeq)
-    val before = listPartFiles(spark, path, partitionCol, landing)
-    df.write.mode(org.apache.spark.sql.SaveMode.Append)
-      .partitionBy(partitionCol).parquet(path)
+    commit(spark, path, base, partitionCol, landing, keyCol, retainVersions,
+      dropParts = replaceParts, dropFiles = replaceFiles,
+      bloomKeys = bloomKeys)(appendFiles(spark, path, df, partitionCol))
+  }
+
+  /** Append `df` as new files of the partitioned table at `path`. */
+  private def appendFiles(spark: SparkSession, path: String, df: DataFrame,
+                          partitionCol: String): Unit = {
+    df.write.mode(SaveMode.Append).partitionBy(partitionCol).parquet(path)
     spark.catalog.refreshByPath(path)
-    val newFiles =
-      (listPartFiles(spark, path, partitionCol, landing) -- before).toSeq
-    // scopedMeta = false callers (helper threads — see the scaladoc)
-    // must not take the scoped-conf lock at all; they already run
-    // inside the batch's own micro-sized, AQE-off window
-    def metaScoped[T](f: => T): T =
-      if (scopedMeta) graft.ScopedSessionConf.withMetaConf(spark, 4)(f)
-      else f
-    metaScoped {
-      val dropped = replaceParts.map(_.toString)
-      // `replaceFiles` drops SPECIFIC superseded files (the epoch
-      // stores' per-file steal rewrite — file granularity, so a fired
-      // bloom never forces a whole-partition rewrite); strings match
-      // exactly because callers take them from this manifest's rows
-      val kept = m.map { old =>
-        val byPart = old.filter(!col("part").isin(dropped: _*))
-        if (replaceFiles.isEmpty) byPart
-        else byPart.filter(!col("file").isin(replaceFiles: _*))
-      }
-      val fresh =
-        if (newFiles.isEmpty) None
-        else Some(statsForFiles(spark, path, newFiles, partitionCol, keyCol,
-          bloomKeys))
-      // coalesce(1): a manifest version is metadata (one row per data
-      // file) and is re-read/collected on EVERY subsequent store read
-      // and probe — one file per version beats shuffle-partition-many
-      // KB-sized files at streaming cadence (r17; a 1e6-row manifest is
-      // still a single ~50 MB task, maintenance-scale)
-      (kept, fresh) match {
-        case (Some(k), Some(f)) =>
-          MergeUpsert.publishPlainFrom(spark, manifestPath(path),
-            k.unionByName(f).coalesce(1), retainVersions, mBase)
-        case (Some(k), None) =>
-          // nothing landed: publish only if the drop filters actually
-          // removed rows — an empty batch into an epoch store must be a
-          // no-op, not a version bump per tick (the probe is one
-          // limit(1) over the tiny manifest)
-          val dropsAnything = m.exists { old =>
-            !old.filter(col("part").isin(dropped: _*) ||
-                (if (replaceFiles.isEmpty) lit(false)
-                 else col("file").isin(replaceFiles: _*)))
-              .limit(1).isEmpty
-          }
-          if (dropsAnything)
-            MergeUpsert.publishPlainFrom(spark, manifestPath(path),
-              k.coalesce(1), retainVersions, mBase)
-        case (None, Some(f)) =>
-          MergeUpsert.publishPlainFrom(spark, manifestPath(path),
-            f.coalesce(1), retainVersions, mBase)
-        case (None, None) => () // empty df on an absent table: no-op
-      }
-    }
   }
 
   /** The manifest files whose per-file key bloom MIGHT contain any of
@@ -484,32 +489,21 @@ object TableManifest {
         collected.collect().map(r => (r.getString(0), r.getString(1))).toSeq
     }
 
+  /** Out-of-band APPEND with exact manifest registration: writes `df`
+    * as new files (no merge semantics — the caller owns key
+    * uniqueness) and registers EXACTLY the files it wrote, leaving
+    * every existing manifest row in place. This is the safe form of
+    * "external writer lands data on a live table": unlike [[update]]'s
+    * dir rescan it cannot resurrect superseded copy-on-write files,
+    * because it never looks at files it didn't just create. */
   def appendManifested(spark: SparkSession, path: String, df: DataFrame,
                        keyCol: String, partitionCol: String = "date",
                        retainVersions: Int = 2): Unit = {
-    // pinned like mergeWriteManifested's mBase: a concurrent manifest
-    // publish during the append is refused at the flip
-    val mBase = MergeUpsert.currentPlainVersion(spark, manifestPath(path))
+    val base = pin(spark, path)
     val touched = df.select(col(partitionCol)).distinct()
       .collect().map(_.get(0)).toSeq
-    val before = listPartFiles(spark, path, partitionCol, touched)
-    df.write.mode(org.apache.spark.sql.SaveMode.Append)
-      .partitionBy(partitionCol).parquet(path)
-    spark.catalog.refreshByPath(path)
-    val newFiles =
-      (listPartFiles(spark, path, partitionCol, touched) -- before).toSeq
-    if (newFiles.isEmpty) return
-    // metadata-scale publish: see mergeWriteManifested's scoped block
-    graft.ScopedSessionConf.withMetaConf(spark, 4) {
-      val fresh = statsForFiles(spark, path, newFiles, partitionCol, keyCol)
-      val merged = load(spark, path) match {
-        case None => fresh
-        case Some(old) => old.unionByName(fresh)
-      }
-      // one file per manifest version (see replacePartitions)
-      MergeUpsert.publishPlainFrom(spark, manifestPath(path),
-        merged.coalesce(1), retainVersions, mBase)
-    }
+    commit(spark, path, base, partitionCol, touched, keyCol,
+      retainVersions)(appendFiles(spark, path, df, partitionCol))
   }
 
   /** Manifest-planned read of the given PARTITION values: keep only
@@ -578,19 +572,10 @@ object TableManifest {
                         maxFilesPerPart: Int = 1,
                         retainVersions: Int = 2,
                         zoneKey: Option[String] = None): CompactReport = {
-    // the flip-guard base is captured FIRST and the manifest contents
-    // read explicitly from THAT version path (r14 advice): load()-then-
-    // currentPlainVersion left a window where a concurrent manifest
-    // publish landing between the two calls paired stale contents with
-    // the new pointer — the guard passed and the compacted manifest
-    // silently unreferenced the interleaver's files. With base and
-    // contents pinned to the same version, such an interleave is
-    // refused at the flip instead (the publishPlainFrom contract).
-    val mBase = MergeUpsert.currentPlainVersion(spark, manifestPath(path))
-    val m = mBase.map(v => spark.read.parquet(s"${manifestPath(path)}/$v"))
-      .orElse(load(spark, path)) // legacy flat manifest: no guard possible
+    val base = pin(spark, path)
+    val m = base.manifest
       .getOrElse(sys.error(s"no manifest at $path — call update() first"))
-    // metadata actions at meta sizing (see mergeWriteManifested)
+    // metadata actions at meta sizing (see commit)
     val (filesBefore, overParts) =
       graft.ScopedSessionConf.withMetaConf(spark, 4) {
         val fb = m.count()
@@ -604,34 +589,18 @@ object TableManifest {
     if (overParts.isEmpty)
       return CompactReport(0, filesBefore, filesBefore)
     val files = keptFiles(m, overParts)
-    val before = listPartFiles(spark, path, partitionCol, overParts)
     // read ONLY the over-threshold partitions' live files
     // (manifest-planned), rewrite them one-file-per-partition as new
-    // appended files — the copy-on-write publish, so readers never see
-    // a partial partition and prior versions stay readable
-    spark.read.option("basePath", path)
-      .parquet(files.toIndexedSeq: _*)
-      .repartition(col(partitionCol))
-      .sortWithinPartitions(col(keyCol))
-      .write.mode(org.apache.spark.sql.SaveMode.Append)
-      .partitionBy(partitionCol)
-      .parquet(path)
-    spark.catalog.refreshByPath(path)
-    val newFiles =
-      (listPartFiles(spark, path, partitionCol, overParts) -- before).toSeq
-    // replace exactly the compacted partitions' manifest rows with the
-    // new files' stats; the partition values re-enter statsForFiles in
-    // their DECODED string form
-    // metadata-scale publish: see mergeWriteManifested's scoped block
-    // (the DATA rewrite above deliberately stays at the session's
-    // shuffle sizing AND keeps AQE — it is table-scale work)
-    graft.ScopedSessionConf.withMetaConf(spark, 4) {
-      val fresh = statsForFiles(spark, path, newFiles, partitionCol,
-        zoneKey.getOrElse(keyCol))
-      val merged = m.filter(!col("part").isin(overParts: _*))
-        .unionByName(fresh)
-      MergeUpsert.publishPlainFrom(spark, manifestPath(path), merged,
-        retainVersions, mBase)
+    // appended files and replace exactly those partitions' manifest
+    // rows (the partition values re-enter statsForFiles in their
+    // DECODED string form). The DATA rewrite deliberately stays at the
+    // session's shuffle sizing AND keeps AQE — it is table-scale work
+    commit(spark, path, base, partitionCol, overParts,
+      zoneKey.getOrElse(keyCol), retainVersions, dropParts = overParts) {
+      appendFiles(spark, path, spark.read.option("basePath", path)
+        .parquet(files.toIndexedSeq: _*)
+        .repartition(col(partitionCol))
+        .sortWithinPartitions(col(keyCol)), partitionCol)
     }
     // filesAfter is MEASURED from the refreshed manifest (one row per
     // file), not derived from a one-file-per-partition assumption a

@@ -24,7 +24,7 @@ object ZoneMap {
 
   /** One pass over a written table: (path, lo, hi, rows) per file for
     * a long-typed `keyCol`. Run at write time, persist next to the
-    * table (an [[ArtifactStore]] payload in production). */
+    * table (a [[MergeUpsert.publishPlain]] artifact in production). */
   def stats(df: DataFrame, keyCol: String): DataFrame =
     // decoded path, not input_file_name()'s URI-encoded form — a table
     // path with a space/'%' must re-read by its literal on-disk name

@@ -133,10 +133,9 @@ object IngestJob {
       val rowsLoaded = rowsIn - rowsRejected
 
       // J4 — dim get-or-create + key substitution
-      val fs = org.apache.hadoop.fs.FileSystem.get(
-        new java.net.URI(regionsPath), spark.sparkContext.hadoopConfiguration)
+      val dimExists = recoverSwap(spark, regionsPath)
       val dim0 =
-        if (fs.exists(new org.apache.hadoop.fs.Path(regionsPath)))
+        if (dimExists)
           spark.read.schema(Tables.regionsSchema).parquet(regionsPath)
         else spark.createDataFrame(
           spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
@@ -146,7 +145,7 @@ object IngestJob {
         cachedAccepted.select(col("region").as("name")))
       val dimOut = dim1.withColumn("created_at", coalesce(col("created_at"), lit(now)))
       dimOut.write.mode("overwrite").parquet(s"$regionsPath.tmp")
-      swap(spark, s"$regionsPath.tmp", regionsPath)
+      swap(spark, s"$regionsPath.tmp", regionsPath, dimExists)
 
       // In-batch duplicate (date, region) rows: the LAST row in file
       // order wins, like the reference's ON CONFLICT DO UPDATE loop —
@@ -184,17 +183,48 @@ object IngestJob {
     }
   }
 
-  /** Atomic-ish directory swap for the non-partitioned dim rewrite
-    * (SURVEY.md §7.4.4 — write-new-then-swap). */
-  private def swap(spark: SparkSession, tmp: String, dst: String): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = org.apache.hadoop.fs.FileSystem.get(new java.net.URI(dst), conf)
+  /** Where [[swap]] parks the live dim dir while the new one moves in. */
+  private def aside(dst: String): String = s"$dst.old"
+
+  /** Dim directory swap for the non-partitioned dim rewrite (SURVEY.md
+    * §7.4.4 — write-new-then-swap), in three steps whose order keeps a
+    * complete dim table on disk at every point: the live `dst` is
+    * renamed aside, `tmp` is renamed in, then the aside copy is
+    * deleted. `dst` keeps its flat layout (readers use a plain
+    * `spark.read.parquet`). A crash between the two renames leaves only
+    * the aside copy, which [[recoverSwap]] restores on the next run;
+    * a crash before the delete leaves a stale aside copy, removed here
+    * before it could be renamed into. `dstExists` is the caller's
+    * [[recoverSwap]] result. */
+  private def swap(spark: SparkSession, tmp: String, dst: String,
+                   dstExists: Boolean): Unit = {
+    val fs = fsFor(spark, dst)
     val dstP = new org.apache.hadoop.fs.Path(dst)
-    val tmpP = new org.apache.hadoop.fs.Path(tmp)
-    if (fs.exists(dstP)) fs.delete(dstP, true)
-    fs.rename(tmpP, dstP)
+    val asideP = new org.apache.hadoop.fs.Path(aside(dst))
+    if (dstExists) {
+      if (fs.exists(asideP)) fs.delete(asideP, true)
+      if (!fs.rename(dstP, asideP))
+        throw new java.io.IOException(s"cannot move $dst aside")
+    }
+    if (!fs.rename(new org.apache.hadoop.fs.Path(tmp), dstP))
+      throw new java.io.IOException(s"cannot swap $tmp into $dst")
+    if (dstExists) fs.delete(asideP, true)
     // Spark's shared FileStatusCache would otherwise serve the deleted
     // file listing to the next read of this path.
     spark.catalog.refreshByPath(dst)
   }
+
+  /** Whether the dim dir `dst` exists, after restoring it from
+    * [[swap]]'s aside copy when a crash between the swap's two renames
+    * left it missing. */
+  private def recoverSwap(spark: SparkSession, dst: String): Boolean = {
+    val fs = fsFor(spark, dst)
+    val dstP = new org.apache.hadoop.fs.Path(dst)
+    val asideP = new org.apache.hadoop.fs.Path(aside(dst))
+    fs.exists(dstP) || (fs.exists(asideP) && fs.rename(asideP, dstP))
+  }
+
+  private def fsFor(spark: SparkSession, path: String) =
+    org.apache.hadoop.fs.FileSystem.get(
+      new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
 }

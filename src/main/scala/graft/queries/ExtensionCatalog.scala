@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.functions.{QualityRules, TextFunctions}
-import graft.operators.{ArtifactStore, AsOfJoin, BloomFilter, Chunking,
+import graft.operators.{AsOfJoin, BloomFilter, Chunking,
   Contamination, CorpusStats, Dedup, EntityResolution, Funnels, GramIndex,
   GraphRank, IncrementalDedup, LabelQuality, MergeUpsert, Multimodal,
   Preference, Privacy, Profiling, RangeJoin, RepeatedSpans, Salting,
@@ -5568,9 +5568,9 @@ object ExtensionCatalog {
         val store = tmp("graft-pca-store")
         val comp = graft.operators.Pca.topComponent(emb, "embedding",
           qBits = PcaQBits, iters = PcaIters)
-        ArtifactStore.publish(s, store, comp)
-        ArtifactStore.publish(s, store, comp) // supersede: flip to v2
-        val v = ArtifactStore.load(s, store)
+        MergeUpsert.publishPlain(s, store, comp)
+        MergeUpsert.publishPlain(s, store, comp) // supersede: flip to v2
+        val v = MergeUpsert.readPlain(s, store)
         emb.select(col("vec_id"),
             posexplode(col("embedding")).as(Seq("pos", "x")))
           .join(broadcast(v), Seq("pos"))
@@ -5771,8 +5771,8 @@ object ExtensionCatalog {
                 BloomM, BloomK).select(col("bitmap").as("b2")))
             .select(BloomFilter.mergeBitmaps(col("bitmap"), col("b2"))
               .as("bitmap"))
-          ArtifactStore.publish(s, store, merged)
-          ledger = ArtifactStore.load(s, store)
+          MergeUpsert.publishPlain(s, store, merged)
+          ledger = MergeUpsert.readPlain(s, store)
           (b, probed.getLong(0), probed.getLong(1))
         }
         rows.toDF("batch_id", "n_rows", "n_dup_flagged")
@@ -7932,7 +7932,7 @@ object ExtensionCatalog {
 
   /** Persisted-index-artifact queries (x115–x118): each trains the
     * artifact its base query trains IN-QUERY, publishes it through
-    * [[ArtifactStore]]'s atomic versioned store, reads it back, and
+    * [[MergeUpsert]]'s atomic versioned store, reads it back, and
     * probes with the STORED copy — under the base query's EXACT oracle
     * SQL ([[sqlOf]]), so "probe-from-store ≡ train-in-query" is a
     * hash-checked result, not a claim. Publishing twice (v1 then v2,
@@ -7948,11 +7948,11 @@ object ExtensionCatalog {
         val store = tmp("graft-ivf-store")
         val cents = Similarity.kmeansCentroids(
           emb, "vec_id", "embedding", k = 16, iters = 2)
-        ArtifactStore.publish(s, store, cents)
-        ArtifactStore.publish(s, store, cents) // supersede: flip to v2
+        MergeUpsert.publishPlain(s, store, cents)
+        MergeUpsert.publishPlain(s, store, cents) // supersede: flip to v2
         Similarity.ivfTopKWith(emb.filter(col("vec_id") < 5), emb,
           "vec_id", "embedding", k = 10,
-          ArtifactStore.load(s, store), nProbe = 2)
+          MergeUpsert.readPlain(s, store), nProbe = 2)
       }),
 
     // the next maintenance step past x115: not just the CENTROIDS but
@@ -7965,9 +7965,9 @@ object ExtensionCatalog {
       (s, dir) => {
         val emb = t(s, dir, "embeddings")
         val centStore = tmp("graft-ivf-cent")
-        ArtifactStore.publish(s, centStore, Similarity.kmeansCentroids(
+        MergeUpsert.publishPlain(s, centStore, Similarity.kmeansCentroids(
           emb, "vec_id", "embedding", k = 16, iters = 2))
-        val cents = ArtifactStore.load(s, centStore)
+        val cents = MergeUpsert.readPlain(s, centStore)
         val postStore = tmp("graft-ivf-post") + "/postings"
         (0 until 3).foreach { kk =>
           Similarity.appendIvfPostings(s, postStore,
@@ -7983,19 +7983,19 @@ object ExtensionCatalog {
       (s, dir) => {
         val emb = t(s, dir, "embeddings")
         val store = tmp("graft-pq-store")
-        ArtifactStore.publish(s, store, Similarity.pqCodebooks(
+        MergeUpsert.publishPlain(s, store, Similarity.pqCodebooks(
           emb, "vec_id", "embedding", m = 4, k = 8, iters = 1))
         Similarity.pqTopKWith(emb.filter(col("vec_id") < 5), emb,
           "vec_id", "embedding", k = 10,
-          ArtifactStore.load(s, store), m = 4)
+          MergeUpsert.readPlain(s, store), m = 4)
       }),
 
     Q("x117_bpe_store_probe", sqlOf("x75_bpe_encode"),
       (s, dir) => {
         val store = tmp("graft-bpe-store")
-        ArtifactStore.publish(s, store, bpeTrained(s, dir)._2)
+        MergeUpsert.publishPlain(s, store, bpeTrained(s, dir)._2)
         graft.operators.Bpe.encodeStats(t(s, dir, "documents"),
-            "doc_id", "text", ArtifactStore.load(s, store))
+            "doc_id", "text", MergeUpsert.readPlain(s, store))
           .orderBy("doc_id")
       }),
 
@@ -8003,12 +8003,12 @@ object ExtensionCatalog {
       (s, dir) => {
         val docs = t(s, dir, "documents")
         val store = tmp("graft-bloom-store")
-        ArtifactStore.publish(s, store, BloomFilter.trainBloom(
+        MergeUpsert.publishPlain(s, store, BloomFilter.trainBloom(
           docs.filter(col("doc_id") % 29 === 0), "text",
           shingleN = 5, m = BloomM, k = BloomK))
         BloomFilter.flagBloomWith(
           docs.filter(col("doc_id") % 29 =!= 0), "doc_id", "text",
-          ArtifactStore.load(s, store),
+          MergeUpsert.readPlain(s, store),
           shingleN = 5, m = BloomM, k = BloomK)
           .orderBy("doc_id")
       })
@@ -8021,7 +8021,7 @@ object ExtensionCatalog {
 
     // ---- margin mining over STORED-IVF candidates — the production
     //      composition x178's scaladoc promises: centroids trained and
-    //      postings assigned at write time (ArtifactStore, the x115/
+    //      postings assigned at write time (a versioned plain store, the x115/
     //      x134 pattern), each left row probes 2 centroid lists and
     //      scores MarginCandK candidates, and the SAME margin math
     //      (Similarity.marginOverCandidates — shared verbatim with the
@@ -8096,9 +8096,9 @@ object ExtensionCatalog {
         val kCents = math.max(16,
           (math.sqrt(bSide.count().toDouble) / 2).toInt)
         val centStore = tmp("graft-margin-cent")
-        ArtifactStore.publish(s, centStore, Similarity.kmeansCentroids(
+        MergeUpsert.publishPlain(s, centStore, Similarity.kmeansCentroids(
           bSide, "vec_id", "embedding", k = kCents, iters = 2))
-        val cents = ArtifactStore.load(s, centStore)
+        val cents = MergeUpsert.readPlain(s, centStore)
         val postStore = tmp("graft-margin-post") + "/postings"
         Similarity.appendIvfPostings(s, postStore, bSide,
           "vec_id", "embedding", cents)
@@ -9769,11 +9769,11 @@ object ExtensionCatalog {
         val kCents = math.max(16,
           (math.sqrt(bSide.count().toDouble) / 2).toInt)
         val centStore = tmp("graft-m235-cent")
-        ArtifactStore.publish(s, centStore, Similarity.kmeansCentroids(
+        MergeUpsert.publishPlain(s, centStore, Similarity.kmeansCentroids(
           bSide, "vec_id", "embedding", k = kCents, iters = 2))
         val postStore = tmp("graft-m235-post") + "/postings"
         Similarity.appendIvfPostings(s, postStore, bSide,
-          "vec_id", "embedding", ArtifactStore.load(s, centStore))
+          "vec_id", "embedding", MergeUpsert.readPlain(s, centStore))
         marginIdx(k) = (s, centStore, postStore)
         (centStore, postStore)
     }
@@ -9799,7 +9799,7 @@ object ExtensionCatalog {
           .filter(col("label") % 2 === 0)
         val cands = Similarity.ivfProbePostings(aSide, "vec_id",
           "embedding", MergeUpsert.readPlain(s, postStore),
-          k = MarginCandK, ArtifactStore.load(s, centStore), nProbe = 2)
+          k = MarginCandK, MergeUpsert.readPlain(s, centStore), nProbe = 2)
         Similarity.marginOverCandidates(
           cands.select(col("qid").as("aid"), col("eid").as("bid"),
             col("sim")),

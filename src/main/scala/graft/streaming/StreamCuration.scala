@@ -181,16 +181,15 @@ object StreamCuration {
           .join(probe, keys, "left_anti")
         stamped.unionByName(victims)
       }
-    // scopedMeta = false: this merge runs from curateBatch's OVERLAPPED
-    // futures while the batch thread holds the ScopedSessionConf lock —
-    // the inner metadata window would deadlock, and the whole batch
-    // already runs at micro shuffle sizing (the window's only point)
+    // the docs/sigs merges run from curateBatch's OVERLAPPED futures
+    // while the batch thread holds the ScopedSessionConf lock; the
+    // commit sees that and skips its metadata window instead of
+    // blocking (the batch already runs at micro shuffle sizing)
     TableManifest.replacePartitions(spark, path, df, keys.head, epochCol,
       replaceParts = Seq(epochStr),
       landingParts = Some((epochStr +: firing.map(_._2)).distinct),
       replaceFiles = firing.map(_._1),
-      bloomKeys = Some(keys),
-      scopedMeta = false)
+      bloomKeys = Some(keys))
   }
 
   /** Drain all currently-available document files, curating
@@ -1037,28 +1036,13 @@ object StreamCuration {
           .map(_.getString(0)).filter(_ <= p).toSeq
         if (parts.nonEmpty) {
           // size the fold's OUTPUT (the point of compaction is fewer,
-          // bigger files): target byte-sized files from a k-dir
-          // listing (metadata; superseded generations overcount ≤ the
-          // retention factor, which only rounds the target up).
-          // repartition, not coalesce — a narrow coalesce would
-          // propagate through the broadcast-join fold plan and
-          // serialize the base scan itself.
-          val base = curatedBasePath(workDir)
-          val fs = new org.apache.hadoop.fs.Path(base)
-            .getFileSystem(spark.sparkContext.hadoopConfiguration)
-          val bytes = parts.iterator.map { v =>
-            val d = new org.apache.hadoop.fs.Path(s"$base/$EpochCol=$v")
-            if (!fs.exists(d)) 0L
-            else fs.listStatus(d).iterator
-              .filter(st => st.isFile &&
-                st.getPath.getName.endsWith(".parquet"))
-              .map(_.getLen).sum
-          }.sum
-          val targetN =
-            math.max(1, math.ceil(bytes.toDouble / targetBytes).toInt)
+          // bigger files): target byte-sized files. repartition, not
+          // coalesce — a narrow coalesce would propagate through the
+          // broadcast-join fold plan and serialize the base scan itself.
           val folded = readCurated(spark, workDir)
             .withColumn(EpochCol, lit(p))
-            .repartition(targetN)
+            .repartition(foldWidth(spark, curatedBasePath(workDir),
+              EpochCol, parts, targetBytes))
           // landingParts = the fold's single epoch stamp, so the full
           // readCurated composition executes ONCE (the write) instead
           // of twice (r15 advice: the landing distinct-collect re-ran
@@ -1138,28 +1122,12 @@ object StreamCuration {
           .map(_.getString(0)).filter(_ <= upTo).toSeq
         if (parts.size <= 1) Seq.empty
         else {
-          val fs = new org.apache.hadoop.fs.Path(path)
-            .getFileSystem(spark.sparkContext.hadoopConfiguration)
-          // output sizing from the k dirs' listing (metadata;
-          // superseded generations overcount <= the retention factor,
-          // which only rounds the target up)
-          val bytes = parts.iterator.map { v =>
-            val d = new org.apache.hadoop.fs.Path(
-              s"$path/$epochCol=" +
-                org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-                  .escapePathName(v))
-            if (!fs.exists(d)) 0L
-            else fs.listStatus(d).iterator
-              .filter(st => st.isFile &&
-                st.getPath.getName.endsWith(".parquet"))
-              .map(_.getLen).sum
-          }.sum
-          val targetN =
-            math.max(1, math.ceil(bytes.toDouble / targetBytes).toInt)
           val folded = TableManifest
             .readPartitions(spark, path, parts, epochCol)
             .withColumn(epochCol, lit(upTo))
-            .repartitionByRange(targetN, col(keys.head))
+            .repartitionByRange(
+              foldWidth(spark, path, epochCol, parts, targetBytes),
+              col(keys.head))
             .sortWithinPartitions(keys.map(col): _*)
           TableManifest.replacePartitions(spark, path, folded, keys.head,
             epochCol, replaceParts = parts,
@@ -1167,6 +1135,14 @@ object StreamCuration {
           (parts :+ upTo).distinct
         }
     }
+
+  /** A fold's output file count: the folded partitions' on-disk bytes
+    * over `targetBytes`, at least one file. */
+  private def foldWidth(spark: SparkSession, path: String, epochCol: String,
+                        parts: Seq[String], targetBytes: Long): Int = {
+    val bytes = TableManifest.partitionBytes(spark, path, epochCol, parts)
+    math.max(1, math.ceil(bytes.toDouble / targetBytes).toInt)
+  }
 
   /** Scoped-vacuum every ON-DISK epoch dir of an epoch-partitioned
     * store and remove emptied dirs — shared by the curated base and

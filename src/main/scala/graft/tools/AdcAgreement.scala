@@ -32,7 +32,7 @@ object AdcAgreement {
       if (args.length > 1) args.drop(1).map(_.toInt).toIndexedSeq
       else Seq(16, 32, 64, 128, 256)
     val spark = graft.Sessions.local("32", "32")
-    import graft.operators.{ArtifactStore, MergeUpsert, Similarity}
+    import graft.operators.{MergeUpsert, Similarity}
 
     val emb = spark.read.parquet(s"$dir/embeddings.parquet")
     val bSide = emb.filter(col("label") % 2 === 1)
@@ -40,15 +40,15 @@ object AdcAgreement {
     val k = 8
     val kCents = math.max(16, (math.sqrt(bSide.count().toDouble) / 2).toInt)
     val work = java.nio.file.Files.createTempDirectory("graft-adc").toString
-    ArtifactStore.publish(spark, s"$work/cent", Similarity.kmeansCentroids(
+    MergeUpsert.publishPlain(spark, s"$work/cent", Similarity.kmeansCentroids(
       bSide, "vec_id", "embedding", k = kCents, iters = 2))
-    val cents = ArtifactStore.load(spark, s"$work/cent")
+    val cents = MergeUpsert.readPlain(spark, s"$work/cent")
     Similarity.appendIvfPostings(spark, s"$work/post", bSide,
       "vec_id", "embedding", cents)
     val postings = MergeUpsert.readPlain(spark, s"$work/post")
-    ArtifactStore.publish(spark, s"$work/book", Similarity.pqCodebooks(
+    MergeUpsert.publishPlain(spark, s"$work/book", Similarity.pqCodebooks(
       bSide, "vec_id", "embedding", m = 4, k = 8, iters = 1))
-    val books = ArtifactStore.load(spark, s"$work/book")
+    val books = MergeUpsert.readPlain(spark, s"$work/book")
     val coded = postings.join(
       Similarity.pqCodesWith(bSide, "vec_id", "embedding", books, m = 4)
         .withColumnRenamed("vec_id", "eid"), "eid")

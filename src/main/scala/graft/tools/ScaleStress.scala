@@ -110,13 +110,13 @@ object ScaleStress {
     val ivfStore = java.nio.file.Files
       .createTempDirectory("graft-stress-ivfstore").toString + "/cents"
     time("ivf artifact train+pub")({
-      graft.operators.ArtifactStore.publish(spark, ivfStore,
+      graft.operators.MergeUpsert.publishPlain(spark, ivfStore,
         Similarity.kmeansCentroids(emb, "vec_id", "embedding", 16, 2))
       16L
     })
     time("ivf probe (stored)")(Similarity.ivfTopKWith(
       emb.filter(col("vec_id") < 5), emb, "vec_id", "embedding", 10,
-      graft.operators.ArtifactStore.load(spark, ivfStore)).count())
+      graft.operators.MergeUpsert.readPlain(spark, ivfStore)).count())
     time("int8 quantize")(Similarity.quantizeInt8(emb, "vec_id", "embedding").count())
     time("stratified sample")(graft.operators.Sampling.stratifiedSample(
       docs, "doc_id", "lang", Map("en" -> 0.4), 0.1).count())

@@ -393,4 +393,80 @@ class MergeUpsertSpec extends SparkSpec {
     assert(MergeUpsert.readPlain(spark, dir)
       .select("total_beds").as[Int].collect().toSeq == Seq(2))
   }
+
+  // ---- trained index artifacts in a versioned plain store: probe-from-
+  // store must equal train-in-query EXACTLY (same rounding, same
+  // tiebreaks — the x115–x118 oracle twins check this cross-engine;
+  // here it is pinned in-engine on fixtures the oracle never sees) ----
+
+  private def vec(seed: Long): Seq[Double] =
+    (0 until 8).map(d => ((seed * 31 + d * 7) % 13 - 6).toDouble)
+
+  private lazy val corpus = (0L until 40L).map(i => (i, vec(i)))
+    .toDF("vec_id", "embedding")
+  private lazy val queries = corpus.filter(col("vec_id") < 3)
+
+  test("IVF probe from stored centroids equals train-in-query") {
+    val store = Files.createTempDirectory("graft-ivf-spec").toString
+    val cents = Similarity.kmeansCentroids(
+      corpus, "vec_id", "embedding", k = 4, iters = 2)
+    MergeUpsert.publishPlain(spark, store, cents)
+    val fromStore = Similarity.ivfTopKWith(queries, corpus,
+      "vec_id", "embedding", k = 5,
+      MergeUpsert.readPlain(spark, store), nProbe = 2).collect().toSeq
+    val inQuery = Similarity.ivfTopK(queries, corpus,
+      "vec_id", "embedding", k = 5, nCentroids = 4, nProbe = 2)
+      .collect().toSeq
+    assert(fromStore == inQuery)
+  }
+
+  test("PQ probe from stored codebooks equals train-in-query") {
+    val store = Files.createTempDirectory("graft-pq-spec").toString
+    MergeUpsert.publishPlain(spark, store, Similarity.pqCodebooks(
+      corpus, "vec_id", "embedding", m = 2, k = 4, iters = 1))
+    val fromStore = Similarity.pqTopKWith(queries, corpus,
+      "vec_id", "embedding", k = 5,
+      MergeUpsert.readPlain(spark, store), m = 2).collect().toSeq
+    val inQuery = Similarity.pqTopK(queries, corpus,
+      "vec_id", "embedding", k = 5, m = 2, kCent = 4, iters = 1)
+      .collect().toSeq
+    assert(fromStore == inQuery)
+  }
+
+  test("bloom probe from stored bitmap equals train-in-query") {
+    val docs = (0L until 30L)
+      .map(i => (i, s"alpha beta gamma delta epsilon zeta token$i " +
+        s"eta theta iota kappa"))
+      .toDF("doc_id", "text")
+    val bench = docs.filter(col("doc_id") % 5 === 0)
+    val scan = docs.filter(col("doc_id") % 5 =!= 0)
+    val store = Files.createTempDirectory("graft-bloom-spec").toString
+    MergeUpsert.publishPlain(spark, store,
+      BloomFilter.trainBloom(bench, "text", shingleN = 3, m = 1 << 10, k = 3))
+    val fromStore = BloomFilter.flagBloomWith(scan, "doc_id", "text",
+      MergeUpsert.readPlain(spark, store), shingleN = 3, m = 1 << 10, k = 3)
+      .orderBy("doc_id").collect().toSeq
+    val inQuery = BloomFilter.flagBloom(scan, "doc_id", "text",
+      bench, "text", shingleN = 3, m = 1 << 10, k = 3)
+      .orderBy("doc_id").collect().toSeq
+    assert(fromStore == inQuery && fromStore.nonEmpty)
+  }
+
+  test("publish flips atomically and retains the superseded version") {
+    val store = Files.createTempDirectory("graft-store-vers").toString
+    val v1 = Seq((1L, Seq(1.0, 2.0))).toDF("cid", "cvec")
+    val v2 = Seq((2L, Seq(3.0, 4.0))).toDF("cid", "cvec")
+    MergeUpsert.publishPlain(spark, store, v1)
+    assert(MergeUpsert.readPlain(spark, store)
+      .select("cid").as[Long].collect().toSeq == Seq(1L))
+    MergeUpsert.publishPlain(spark, store, v2)
+    assert(MergeUpsert.readPlain(spark, store)
+      .select("cid").as[Long].collect().toSeq == Seq(2L),
+      "readPlain must see the flipped version")
+    val vers = MergeUpsert.retainedVersions(spark, store)
+    assert(vers.size == 2, s"retainVersions=2 keeps live+1, got $vers")
+    // the superseded version stays readable for in-flight probes
+    assert(MergeUpsert.readPlainVersion(spark, store, vers.head)
+      .select("cid").as[Long].collect().toSeq == Seq(1L))
+  }
 }

@@ -312,7 +312,7 @@ class TableManifestSpec extends SparkSpec {
     assert(viaM.count() == 40L)
     assert(viaM.select("date").distinct().as[String].collect().toSet ==
       parts.toSet)
-    // incremental merge touching ONE escaped partition: statsFor must
+    // incremental merge touching ONE escaped partition: the commit must
     // address the escaped dir, untouched escaped entries carry over
     val before = m.map(r => r.getString(1) -> r.getString(0)).toMap
     TableManifest.mergeWriteManifested(spark, path,
@@ -437,51 +437,216 @@ class TableManifestSpec extends SparkSpec {
     assert(listed2 == live2)
   }
 
+  // ---- the shared commit's contract, once per writer: every manifest
+  // writer ends in the same pinned-base commit, so each must refuse an
+  // interleaved publish and survive a crash at the commit seam ----
+
+  /** The table every writer case starts from: two partitions, a second
+    * registered file in 2024-01-02 (for the compaction to fold) and an
+    * out-of-band landing in 2024-01-03 (for update to register). */
+  private def writerTable(): String = {
+    val path = tmpDir()
+    TableManifest.mergeWriteManifested(spark, path,
+      rows("2024-01-01", 1L to 20L, 1.0)
+        .unionByName(rows("2024-01-02", 21L to 40L, 1.0)),
+      keys = Seq("id"))
+    TableManifest.appendManifested(spark, path,
+      rows("2024-01-02", 41L to 45L, 1.0), keyCol = "id")
+    rows("2024-01-03", 46L to 50L, 1.0)
+      .write.mode("append").partitionBy("date").parquet(path)
+    spark.catalog.refreshByPath(path)
+    path
+  }
+
+  private val writers: Seq[(String, String => Unit)] = Seq(
+    "update" -> (p =>
+      TableManifest.update(spark, p, "date", Seq("2024-01-03"), "id")),
+    "mergeWriteManifested" -> { p =>
+      TableManifest.mergeWriteManifested(spark, p,
+        rows("2024-01-01", 1L to 5L, 2.0), keys = Seq("id"))
+      ()
+    },
+    "appendManifested" -> (p =>
+      TableManifest.appendManifested(spark, p,
+        rows("2024-01-04", 60L to 65L, 2.0), keyCol = "id")),
+    "replacePartitions" -> (p =>
+      TableManifest.replacePartitions(spark, p,
+        rows("2024-01-01", 1L to 3L, 4.0), "id", "date",
+        Seq("2024-01-01"))),
+    "compactManifested" -> { p =>
+      TableManifest.compactManifested(spark, p, keyCol = "id")
+      ()
+    })
+
+  /** A second writer's full manifested merge, landing at the seam. */
+  private def interleaver(p: String): Unit = {
+    TableManifest.mergeWriteManifested(spark, p,
+      rows("2024-01-02", 21L to 25L, 3.0), keys = Seq("id"))
+    ()
+  }
+
+  /** What readers see: the rows through the manifest, and its file
+    * count per partition (a compaction changes only the latter). */
+  private def image(path: String) = {
+    val world = TableManifest.readViaManifest(spark, path)
+      .select(col("id"), col("value"), col("date").cast("string"))
+      .collect().map(r => (r.getLong(0), r.getDouble(1), r.getString(2)))
+      .sorted.toSeq
+    val layout = TableManifest.load(spark, path).get
+      .groupBy("part").count().collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    (world, layout)
+  }
+
+  private def dataFiles(path: String): Set[String] =
+    new java.io.File(path).listFiles()
+      .filter(f => f.isDirectory && f.getName.contains("="))
+      .flatMap(_.listFiles()).filter(_.getName.endsWith(".parquet"))
+      .map(_.getCanonicalPath).toSet
+
+  private def liveFiles(path: String): Set[String] =
+    TableManifest.load(spark, path).get.select("file").collect()
+      .map(r => new java.io.File(new java.net.URI(r.getString(0)).getPath)
+        .getCanonicalPath).toSet
+
+  /** Run `f` with `hook` on the commit seam of `path`, fired once (the
+    * hook's own writes commit through the same seam). */
+  private def atSeam[T](path: String)(hook: => Unit)(f: => T): T = {
+    val fired = new java.util.concurrent.atomic.AtomicBoolean(false)
+    TableManifest.beforePublish = p =>
+      if (p == path && fired.compareAndSet(false, true)) hook
+    try f finally TableManifest.beforePublish = _ => ()
+  }
+
   test("two manifested writers interleaving: the second manifest flip " +
     "is refused, the (table, manifest) pair stays exactly the first " +
     "writer's, vacuum reclaims the loser's orphans, and a retry " +
     "converges") {
-    val path = tmpDir()
-    TableManifest.mergeWriteManifested(spark, path,
-      rows("2024-01-01", 1L to 50L, 1.0), keys = Seq("id"))
-    def world() = TableManifest.readViaManifest(spark, path)
-      .select("id", "value").collect()
-      .map(r => r.getLong(0) -> r.getDouble(1)).sorted.toSeq
-    // writer B starts its merge; writer A completes a FULL manifested
-    // merge inside B's data-append→manifest-flip window (the seam)
-    intercept[java.util.ConcurrentModificationException] {
-      TableManifest.mergeWriteManifested(spark, path,
-        rows("2024-01-01", 1L to 10L, 2.0), keys = Seq("id"),
-        beforeManifestPublish = () =>
-          TableManifest.mergeWriteManifested(spark, path,
-            rows("2024-01-01", 40L to 50L, 3.0), keys = Seq("id")))
+    writers.foreach { case (name, write) =>
+      // the expected images, from uninterrupted runs on twin tables
+      val onlyA = writerTable()
+      interleaver(onlyA)
+      val aThenB = writerTable()
+      interleaver(aThenB)
+      write(aThenB)
+
+      val path = writerTable()
+      val onDisk = dataFiles(path)
+      intercept[java.util.ConcurrentModificationException] {
+        atSeam(path)(interleaver(path))(write(path))
+      }
+      // x202 byte-identity invariant: the pair is EXACTLY the
+      // interleaver's publish, every referenced file on disk
+      assert(image(path) == image(onlyA),
+        s"$name: the refused write must not be visible")
+      val live = liveFiles(path)
+      assert(live.subsetOf(dataFiles(path)), s"$name: dangling manifest ref")
+      val orphans = dataFiles(path) -- onDisk -- live
+      if (name != "update") // the bootstrap rescan writes no data
+        assert(orphans.nonEmpty, s"$name: the loser's files stay on disk")
+      // the documented recovery: re-run against the fresh base
+      write(path)
+      assert(image(path) == image(aThenB), s"$name: retry must converge")
+      // vacuum reclaims the orphans without touching the table
+      TableManifest.vacuum(spark, path, keepVersions = 1)
+      assert(dataFiles(path) == liveFiles(path),
+        s"$name: post-vacuum the dirs hold exactly the live file set")
+      assert(orphans.intersect(dataFiles(path)).isEmpty)
+      assert(image(path) == image(aThenB), s"$name: vacuum changed the table")
     }
-    // x202 byte-identity invariant: the pair is EXACTLY writer A's
-    // publish — B's rows invisible, every referenced file on disk
-    val expectA = ((1L to 39L).map(_ -> 1.0) ++
-      (40L to 50L).map(_ -> 3.0)).sorted
-    assert(world() == expectA, "B's refused merge must not be visible")
-    val live = TableManifest.load(spark, path).get
-      .select("file").collect().map(_.getString(0))
-    live.foreach(f => assert(new java.io.File(
-      new java.net.URI(f).getPath).exists(), s"dangling manifest ref $f"))
-    // B's appended generation is an unreferenced orphan on disk...
-    val dirFiles = new java.io.File(s"$path/date=2024-01-01")
-      .listFiles().count(_.getName.endsWith(".parquet"))
-    assert(dirFiles > live.length, "B's orphaned files should be on disk")
-    // ...and vacuum reclaims it without touching A's world
-    TableManifest.vacuum(spark, path, keepVersions = 1)
-    val dirAfter = new java.io.File(s"$path/date=2024-01-01")
-      .listFiles().count(_.getName.endsWith(".parquet"))
-    assert(dirAfter == TableManifest.load(spark, path).get.count(),
-      "post-vacuum the dir holds exactly the live file set")
-    assert(world() == expectA, "vacuum must not change the table")
-    // the documented recovery: B re-runs against the fresh base
-    TableManifest.mergeWriteManifested(spark, path,
-      rows("2024-01-01", 1L to 10L, 2.0), keys = Seq("id"))
-    val expectRetry = ((1L to 10L).map(_ -> 2.0) ++
-      (11L to 39L).map(_ -> 1.0) ++ (40L to 50L).map(_ -> 3.0)).sorted
-    assert(world() == expectRetry)
+  }
+
+  test("a crash at the commit seam leaves every writer's table at its " +
+    "pre-image, and a retry reaches the uninterrupted post-image") {
+    writers.foreach { case (name, write) =>
+      val twin = writerTable()
+      write(twin)
+
+      val path = writerTable()
+      val pre = image(path)
+      val versions = TableManifest.versions(spark, path)
+      val e = intercept[IllegalStateException] {
+        atSeam(path)(throw new IllegalStateException("crash"))(write(path))
+      }
+      assert(e.getMessage == "crash")
+      assert(TableManifest.versions(spark, path) == versions,
+        s"$name: no manifest version may be published before the flip")
+      assert(image(path) == pre, s"$name: readers must see the pre-image")
+      assert(image(twin) != pre, s"$name: fixture sanity — the write shows")
+      write(path)
+      assert(image(path) == image(twin),
+        s"$name: the retry must reach the uninterrupted post-image")
+    }
+  }
+
+  private def epochRows(e: String, ids: Seq[Long], v: Double) =
+    ids.map(i => (i, e, v)).toDF("id", "ep", "value")
+
+  private def epochWorld(path: String) =
+    TableManifest.readViaManifest(spark, path)
+      .select(col("id"), col("ep"), col("value")).collect()
+      .map(r => (r.getLong(0), r.getString(1), r.getDouble(2))).sorted.toSeq
+
+  test("replacePartitions steals exactly the bloom-fired files through " +
+    "replaceFiles: the reused key moves epochs, other files carry over") {
+    val path = tmpDir()
+    val keys = Seq("id")
+    Seq("e1" -> (1L to 10L), "e2" -> (11L to 20L)).foreach { case (e, ids) =>
+      TableManifest.replacePartitions(spark, path, epochRows(e, ids, 1.0),
+        "id", "ep", Seq(e), bloomKeys = Some(keys))
+    }
+    def manifestFiles(part: String) = TableManifest.load(spark, path).get
+      .filter(col("part") === part).select("file").collect()
+      .map(_.getString(0)).toSet
+    val e1Before = manifestFiles("e1")
+    val e2Before = manifestFiles("e2")
+    // epoch e3 reuses id 5, which e1's file holds
+    val batch = epochRows("e3", Seq(5L, 30L), 2.0)
+    val firing = TableManifest
+      .filesMaybeContaining(spark, path, batch.select("id"), keys)
+      .filter(_._2 != "e3")
+    val stolen = firing.map(_._1).toSet
+    assert(firing.nonEmpty && firing.forall(_._2 == "e1") &&
+      stolen.subsetOf(e1Before), s"only e1 holds a batch key: $firing")
+    val victims = spark.read.option("basePath", path)
+      .parquet(firing.map(_._1): _*)
+      .join(batch.select("id"), Seq("id"), "left_anti")
+    TableManifest.replacePartitions(spark, path, batch.unionByName(victims),
+      "id", "ep", Seq("e3"),
+      landingParts = Some(Seq("e3", "e1")),
+      replaceFiles = firing.map(_._1), bloomKeys = Some(keys))
+    assert(epochWorld(path) ==
+      ((1L to 10L).filter(_ != 5L).map(i => (i, "e1", 1.0)) ++
+        (11L to 20L).map(i => (i, "e2", 1.0)) ++
+        Seq((5L, "e3", 2.0), (30L, "e3", 2.0))).sorted,
+      "the reused key lives once, in its new epoch")
+    assert(manifestFiles("e1").intersect(stolen).isEmpty,
+      "the stolen files leave the manifest")
+    assert((e1Before -- stolen).subsetOf(manifestFiles("e1")) &&
+      manifestFiles("e2") == e2Before, "unfired files carry over")
+  }
+
+  test("replacePartitions: an empty batch that drops nothing is a no-op " +
+    "(no version bump); one naming a live partition drops it") {
+    val path = tmpDir()
+    val empty = epochRows("e9", Nil, 0.0)
+    TableManifest.replacePartitions(spark, path, empty, "id", "ep",
+      Seq("e9"), landingParts = Some(Seq("e9")))
+    assert(TableManifest.load(spark, path).isEmpty,
+      "an empty batch on an absent table creates no manifest")
+    TableManifest.replacePartitions(spark, path,
+      epochRows("e1", 1L to 10L, 1.0), "id", "ep", Seq("e1"))
+    val v0 = TableManifest.versions(spark, path)
+    TableManifest.replacePartitions(spark, path, empty, "id", "ep",
+      Seq("e9"), landingParts = Some(Seq("e9")))
+    assert(TableManifest.versions(spark, path) == v0,
+      "nothing landed and nothing dropped: no publish")
+    assert(epochWorld(path) == (1L to 10L).map(i => (i, "e1", 1.0)))
+    TableManifest.replacePartitions(spark, path, empty, "id", "ep",
+      Seq("e1"), landingParts = Some(Seq("e1")))
+    assert(TableManifest.versions(spark, path).last != v0.last)
+    assert(TableManifest.load(spark, path).get.count() == 0,
+      "an empty replacement of a live partition drops its files")
   }
 
   test("scoped symlink re-export rewrites ONLY the requested " +

@@ -136,4 +136,39 @@ class EndToEndSpec extends SparkSpec {
     assert(vac.filesDeleted >= 1, s"superseded ingest files: $vac")
     assert(spark.read.parquet(s"$base/capacity").count() == 4)
   }
+
+  test("dim swap crash states: a missing dim is restored from the aside " +
+    "copy, a stale aside copy is cleared, and ingest proceeds") {
+    val dir = Files.createTempDirectory("graft-swap").toString
+    val regions = s"$dir/regions"
+    def ingest(runId: String, now: String) =
+      IngestJob.run(spark, csvPath, s"$dir/capacity", regions,
+        s"$dir/rejects", s"$dir/runs", runId, "fixture", ts(now))
+    def dim() = spark.read.parquet(regions)
+      .select(col("name"), col("created_at").cast("string")).collect()
+      .map(r => r.getString(0) -> r.getString(1)).toMap
+    def exists(p: String) = Files.exists(java.nio.file.Paths.get(p))
+    ingest("run-1", "2024-01-18 00:00:00")
+    val first = dim()
+    assert(first.keySet == Set("California", "Texas"))
+
+    // crash between the swap's two renames: the live dir is aside and
+    // nothing is at `regions`
+    Files.move(java.nio.file.Paths.get(regions),
+      java.nio.file.Paths.get(s"$regions.old"))
+    assert(!exists(regions))
+    ingest("run-2", "2024-01-19 00:00:00")
+    assert(dim() == first,
+      "the restored dim keeps its rows (a recreated one would carry " +
+        "run-2's created_at)")
+    assert(!exists(s"$regions.old"))
+
+    // crash after the new dir moved in, before the aside delete
+    spark.read.parquet(regions).write.parquet(s"$regions.old")
+    ingest("run-3", "2024-01-20 00:00:00")
+    assert(dim() == first)
+    assert(!exists(s"$regions.old"), "the stale aside copy is cleared")
+    assert(graft.operators.TableManifest
+      .readViaManifest(spark, s"$dir/capacity").count() == 4)
+  }
 }
