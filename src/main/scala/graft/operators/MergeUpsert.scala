@@ -19,10 +19,12 @@ import org.apache.spark.sql.functions._
   *     broadcasts it and the existing table is NEVER shuffled. Compare the
   *     naive union+window form, which shuffles the full table on every
   *     merge.
-  *   - `mergeWrite` additionally prunes by partition: only the date
-  *     partitions present in the update batch are read, merged, and
-  *     rewritten (dynamic partition overwrite). A day's upsert into a
-  *     100 TB table touches one day's partitions, not the table.
+  *   - the partitioned keyed merge
+  *     ([[TableManifest.mergeWriteManifested]]) additionally prunes by
+  *     partition: only the date partitions present in the update batch
+  *     are read, merged, and appended as new copy-on-write files. A
+  *     day's upsert into a 100 TB table touches one day's partitions,
+  *     not the table.
   */
 object MergeUpsert {
 
@@ -55,8 +57,8 @@ object MergeUpsert {
     // written. For a backfill-scale batch (millions of keys) a forced
     // broadcast inverts into the bottleneck — callers that know they're
     // backfilling pass broadcastKeys = false for a plain shuffle join
-    // (mergeWrite flips this automatically off the batch's estimated
-    // distinct-key count).
+    // (TableManifest.mergeWriteManifested flips this automatically off
+    // the batch's estimated distinct-key count).
     val distinctKeys = deduped.select(keyCols: _*).distinct()
     val updateKeys = if (broadcastKeys) broadcast(distinctKeys) else distinctKeys
     val survivors = existing.join(updateKeys, keys, "left_anti")
@@ -207,7 +209,8 @@ object MergeUpsert {
     * A legacy flat table (parquet files directly at `path`, no pointer)
     * is read as the merge base on first call, left untouched until the
     * new version is live, then cleaned best-effort. For large facts
-    * prefer `mergeWrite` (partition-pruned rewrite). */
+    * prefer [[TableManifest.mergeWriteManifested]] (partition-pruned
+    * copy-on-write). */
   def mergeWritePlain(spark: SparkSession, path: String, updates: DataFrame,
                       keys: Seq[String], retainVersions: Int = 2): Unit = {
     val (cur, legacyFlat, base) = resolveBase(spark, path)
@@ -361,21 +364,8 @@ object MergeUpsert {
           "re-run the merge (single-writer is the contract, this guard " +
           "only detects violations)")
     }
-    // publish: write the pointer beside the table, then one atomic
-    // rename. rename-over works on POSIX; filesystems that refuse to
-    // clobber get delete+rename of the POINTER FILE only (a lost
-    // pointer is recoverable — readers fall back to the newest
-    // version dir, see currentPlainVersion).
-    val ptr = new org.apache.hadoop.fs.Path(p, PointerName)
-    val tmp = new org.apache.hadoop.fs.Path(p, s"$PointerName.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(vname.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    if (!fs.rename(tmp, ptr)) {
-      fs.delete(ptr, false)
-      if (!fs.rename(tmp, ptr))
-        throw new java.io.IOException(s"cannot publish pointer $ptr")
-    }
+    // publish: one atomic pointer flip (see writePointer)
+    writePointer(fs, p, PointerName, vname)
     // GC (best-effort, post-publish): crashed-writer orphans, plus
     // published versions beyond the newest `retainVersions`. Superseded
     // versions are RETAINED for retainVersions-1 merge cycles: an
@@ -442,9 +432,8 @@ object MergeUpsert {
     * stores (file count ≤ target) are left untouched — repeated
     * compaction must not bump versions forever.
     *
-    * The partitioned [[mergeWrite]] layout needs no analogue: dynamic
-    * partition overwrite rewrites every touched partition wholesale
-    * (one file per date by construction), so partitions never fragment.
+    * The partitioned manifested layout has its own pass,
+    * [[TableManifest.compactManifested]].
     */
   def compactPlain(spark: SparkSession, path: String,
                    targetBytes: Long = 128L << 20,
@@ -561,17 +550,7 @@ object MergeUpsert {
   def currentPlainVersion(spark: SparkSession, path: String): Option[String] = {
     val fs = fsFor(spark, path)
     val p = new org.apache.hadoop.fs.Path(path)
-    val ptr = new org.apache.hadoop.fs.Path(p, PointerName)
-    val pointed =
-      if (!fs.exists(ptr)) None
-      else {
-        val in = fs.open(ptr)
-        try {
-          val r = new java.io.BufferedReader(new java.io.InputStreamReader(
-            in, java.nio.charset.StandardCharsets.UTF_8))
-          Option(r.readLine()).map(_.trim).filter(_.nonEmpty)
-        } finally in.close()
-      }
+    val pointed = readPointer(fs, p, PointerName)
     def marked(v: String): Boolean = fs.exists(new org.apache.hadoop.fs.Path(
       new org.apache.hadoop.fs.Path(p, v), CommitMarker))
     def legacyCommitted(v: String): Boolean = fs.exists(
@@ -590,6 +569,45 @@ object MergeUpsert {
         dirs.filter(legacyCommitted).sorted.lastOption else None)
   }
 
+  /** Atomically replace the one-line pointer file `dir/name` with
+    * `value`: write it beside the pointer, then one rename. Rename-over
+    * works on POSIX; filesystems that refuse to clobber get
+    * delete+rename of the POINTER FILE only (a lost `_CURRENT` is
+    * recoverable — readers fall back to the newest committed version
+    * dir, see [[currentPlainVersion]]). Shared with StreamCuration's
+    * `_PUBLISHED`/`_ABSORBED` epoch pointers. */
+  private[graft] def writePointer(fs: org.apache.hadoop.fs.FileSystem,
+                                  dir: org.apache.hadoop.fs.Path,
+                                  name: String, value: String): Unit = {
+    val ptr = new org.apache.hadoop.fs.Path(dir, name)
+    val tmp = new org.apache.hadoop.fs.Path(dir, s"$name.tmp")
+    val out = fs.create(tmp, true)
+    try out.write(value.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    finally out.close()
+    if (!fs.rename(tmp, ptr)) {
+      fs.delete(ptr, false)
+      if (!fs.rename(tmp, ptr))
+        throw new java.io.IOException(s"cannot publish pointer $ptr")
+    }
+  }
+
+  /** The value [[writePointer]] left in `dir/name`: its first line,
+    * trimmed; None when the file is absent or blank. */
+  private[graft] def readPointer(fs: org.apache.hadoop.fs.FileSystem,
+                                 dir: org.apache.hadoop.fs.Path,
+                                 name: String): Option[String] = {
+    val ptr = new org.apache.hadoop.fs.Path(dir, name)
+    if (!fs.exists(ptr)) None
+    else {
+      val in = fs.open(ptr)
+      try {
+        val r = new java.io.BufferedReader(new java.io.InputStreamReader(
+          in, java.nio.charset.StandardCharsets.UTF_8))
+        Option(r.readLine()).map(_.trim).filter(_.nonEmpty)
+      } finally in.close()
+    }
+  }
+
   private def versionDirs(fs: org.apache.hadoop.fs.FileSystem,
                           p: org.apache.hadoop.fs.Path): Seq[String] =
     if (!fs.exists(p)) Seq.empty
@@ -603,126 +621,12 @@ object MergeUpsert {
     fs.exists(p) && fs.listStatus(p)
       .exists(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
 
-  /** What [[mergeWrite]] decided: how many partitions the batch
-    * touched, the estimated distinct-key cardinality of the batch, and
-    * whether the anti-join broadcast the key set. The create-table
-    * first write reports (0, 0, false) — there is no join to plan. */
+  /** What [[TableManifest.mergeWriteManifested]] decided: how many
+    * partitions the batch touched, the estimated distinct-key
+    * cardinality of the batch, and whether the anti-join broadcast the
+    * key set (false on a table's first write — there is no join to
+    * plan). */
   final case class MergeWriteReport(touchedPartitions: Int,
                                     keyEstimate: Long,
                                     broadcastKeys: Boolean)
-
-  /** Merge `updates` into the date-partitioned parquet table at `path`,
-    * rewriting ONLY the partitions the batch touches. Creates the table on
-    * first write. `partitionCol` values must be present in `updates`.
-    *
-    * The broadcast-vs-shuffle anti-join decision gates on the batch's
-    * ESTIMATED DISTINCT-KEY COUNT (`approx_count_distinct`, computed in
-    * the same single stats pass as the touched-partition IN-list), not
-    * on how many partitions it touches — two touched dates of a
-    * mega-table can carry millions of keys, and a partition-count gate
-    * would happily broadcast them (the r4 audit's few-but-huge hole;
-    * MergeStress's `few-huge` case proves the switch). */
-  /** ONE stats pass over a batch: the touched-partition IN-list (small
-    * by construction — one ingest covers few dates) and the
-    * key-cardinality estimate the join decision needs. Exposed to
-    * callers (TableManifest) that need `touched` for their own
-    * bookkeeping, so the batch is scanned once, not once per layer. */
-  def batchStats(updates: DataFrame, keys: Seq[String],
-                 partitionCol: String): (Seq[Any], Long) = {
-    // AQE off for the collect: a global agg's exchange carries one
-    // partial row per map task regardless of batch size (nothing to
-    // adapt), and AQE would materialize it as its own query-stage JOB —
-    // pure scheduler latency on every merge (JobCount r17)
-    val statsRow = graft.ScopedSessionConf.withConf(
-        updates.sparkSession, "spark.sql.adaptive.enabled", "false") {
-      updates.agg(
-        collect_set(col(partitionCol)).as("parts"),
-        approx_count_distinct(xxhash64(keys.map(col): _*)).as("key_est"))
-        .collect().head
-    }
-    (statsRow.getSeq[Any](0), statsRow.getLong(1))
-  }
-
-  def mergeWrite(spark: SparkSession, path: String, updates: DataFrame,
-                 keys: Seq[String], partitionCol: String = "date",
-                 broadcastMaxKeys: Long = 500000L,
-                 listingVia: Option[Seq[Any] => DataFrame] = None,
-                 cow: Boolean = false,
-                 precomputedStats: Option[(Seq[Any], Long)] = None)
-      : MergeWriteReport = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
-    val exists = fs.exists(new org.apache.hadoop.fs.Path(path))
-    if (!exists) {
-      // repartition by the partition column first: otherwise EVERY task
-      // writes a file into EVERY touched partition (tasks × dates tiny
-      // files — measured 80× write amplification on a historical
-      // backfill spanning ~2400 dates)
-      updates.dropDuplicates(keys)
-        .repartition(col(partitionCol))
-        .write.mode(SaveMode.Overwrite).partitionBy(partitionCol).parquet(path)
-      return MergeWriteReport(0, 0L, broadcastKeys = false)
-    }
-    val (touched, keyEst) =
-      precomputedStats.getOrElse(batchStats(updates, keys, partitionCol))
-    // `listingVia` (e.g. TableManifest's file-zone planner) resolves
-    // the touched partitions' rows WITHOUT the O(partitions) recursive
-    // root listing — MergeStress measured that listing as the dominant
-    // cost of incremental merges at 2400 partitions. Default keeps the
-    // plain scan+filter (partition pruning still skips data, but the
-    // discovery listing is table-wide).
-    val pruned = listingVia match {
-      case Some(resolve) => resolve(touched)
-      case None => spark.read.parquet(path)
-        .filter(col(partitionCol).isin(touched: _*))
-    }
-    // Incremental batches (few distinct keys) keep the broadcast
-    // anti-join; a backfill-scale key set — whether spread over 600
-    // dates or packed into 2 — switches to a shuffle join before the
-    // broadcast becomes the bottleneck.
-    val broadcastDecision = keyEst <= broadcastMaxKeys
-    val merged = merge(pruned, updates, keys,
-      broadcastKeys = broadcastDecision)
-    // Publish the touched partitions' merged rows. Two physical modes
-    // with identical logical semantics for manifest-planned readers:
-    //   - dynamic partition overwrite (default): replace the touched
-    //     partitions in place — superseded files are DELETED by the
-    //     commit, so the dir stays plain-readable but no prior
-    //     snapshot of a rewritten partition survives;
-    //   - copy-on-write (`cow`, the TableManifest protocol): APPEND
-    //     the merged rows as new immutable files and leave the
-    //     superseded ones on disk — visibility is the MANIFEST version
-    //     flip, prior versions stay readable (time travel / in-flight
-    //     readers) until TableManifest.vacuum reclaims them. A cow dir
-    //     is NOT plain-readable after its first rewrite (it holds both
-    //     generations); every read must plan from the manifest.
-    val doWrite = () => {
-      val laidOut = merged
-        .repartition(col(partitionCol)) // one task per date → one file per date
-        .sortWithinPartitions(keys.map(col): _*) // clustered row groups →
-        // parquet min/max stats prune key lookups inside each date file
-        .write
-      if (cow)
-        laidOut.mode(SaveMode.Append).partitionBy(partitionCol).parquet(path)
-      else laidOut
-        .mode(SaveMode.Overwrite)
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(partitionCol)
-        .parquet(path)
-    }
-    // Incremental-sized batches (the same signal that picks the
-    // broadcast anti-join) also drop AQE for the write: the plan's
-    // exchanges (update dedup, the partition-layout repartition) would
-    // each materialize as a sequential query-stage JOB, and an
-    // incremental merge has nothing for AQE to adapt — its shuffles are
-    // key-estimate-bounded and its layout repartition is explicit.
-    // Backfill-scale batches keep AQE (skew + coalescing matter there).
-    if (broadcastDecision)
-      graft.ScopedSessionConf.withConf(spark,
-        "spark.sql.adaptive.enabled", "false")(doWrite())
-    else doWrite()
-    // invalidate the shared file-listing cache for readers of this path
-    spark.catalog.refreshByPath(path)
-    MergeWriteReport(touched.length, keyEst, broadcastDecision)
-  }
 }

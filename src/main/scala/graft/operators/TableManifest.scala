@@ -35,9 +35,10 @@ import org.apache.spark.sql.functions._
   * ([[readViaManifest]] / [[readPartitions]] / [[lookup]]), exactly
   * Delta's contract for its log.
   *
-  * ONE COMMIT: the five writers — [[update]], [[mergeWriteManifested]],
-  * [[appendManifested]], [[replacePartitions]], [[compactManifested]] —
-  * each add only their own data step to the same private `commit`:
+  * ONE COMMIT: the four writers — [[mergeWriteManifested]] (the
+  * engine's keyed partitioned merge), [[appendManifested]],
+  * [[replacePartitions]], [[compactManifested]] — each add only their
+  * own data step to the same private `commit`:
   *  1. pin the manifest base version and read its contents from that
   *     version's own path (`pin`);
   *  2. list the landing partition dirs before and after the data write
@@ -232,10 +233,9 @@ object TableManifest {
 
   /** The copy-on-write commit every writer ends in (see the object
     * scaladoc): `write` lands the writer's data under the `landing`
-    * partitions; the files it added (every file found there, with
-    * `registerExisting` — [[update]]'s bootstrap rescan) are
-    * registered, `dropParts`/`dropFiles` leave the pinned manifest, and
-    * one manifest version is published against `base.version`.
+    * partitions; the files it added there are registered,
+    * `dropParts`/`dropFiles` leave the pinned manifest, and one
+    * manifest version is published against `base.version`.
     *
     * Nothing landed and nothing dropped publishes nothing — an empty
     * batch into an epoch store is a no-op, not a version bump per tick
@@ -251,12 +251,9 @@ object TableManifest {
                         zoneKey: String, retainVersions: Int,
                         dropParts: Seq[Any] = Nil,
                         dropFiles: Seq[String] = Nil,
-                        bloomKeys: Option[Seq[String]] = None,
-                        registerExisting: Boolean = false)
+                        bloomKeys: Option[Seq[String]] = None)
                        (write: => T): T = {
-    val before =
-      if (registerExisting) Set.empty[String]
-      else listPartFiles(spark, path, partitionCol, landing).keySet
+    val before = listPartFiles(spark, path, partitionCol, landing).keySet
     val out = write
     val newFiles =
       (listPartFiles(spark, path, partitionCol, landing).keySet -- before)
@@ -303,23 +300,7 @@ object TableManifest {
     out
   }
 
-  /** (Re)build manifest rows for `touched` partitions from a FULL
-    * rescan of those partitions' dirs, and publish the merged manifest
-    * atomically. This is the BOOTSTRAP/adoption path (a table created
-    * by plain writes gains a manifest; MergeStress uses it at 2400
-    * partitions): the dir rescan registers EVERY file it finds, so on
-    * a copy-on-write table it is only correct for partitions that hold
-    * no superseded files — i.e. never rewritten, or vacuumed with
-    * `keepVersions = 1` since their last rewrite. For out-of-band data
-    * arrival on a live table use [[appendManifested]], which registers
-    * exactly the files it wrote. */
-  def update(spark: SparkSession, path: String, partitionCol: String,
-             touched: Seq[Any], keyCol: String,
-             retainVersions: Int = 2): Unit =
-    commit(spark, path, pin(spark, path), partitionCol, touched, keyCol,
-      retainVersions, dropParts = touched, registerExisting = true)(())
-
-  /** The live manifest, or None before the first [[update]]. */
+  /** The live manifest, or None before the first publish. */
   def load(spark: SparkSession, path: String): Option[DataFrame] =
     MergeUpsert.existingPlain(spark, manifestPath(path))
 
@@ -354,20 +335,71 @@ object TableManifest {
     } else rd.parquet(kept: _*)
   }
 
-  /** [[MergeUpsert.mergeWrite]] + manifest maintenance, copy-on-write:
-    * the touched partition set is computed once from the batch
-    * (O(batch)); the merge's existing-rows read plans from the
-    * manifest (file list per touched partition, zero root listing);
-    * the merged rows are APPENDED as new immutable files (the
-    * superseded generation stays on disk for retained-version readers
-    * and [[readVersion]], reclaimed by [[vacuum]]); and exactly the
-    * new files' manifest rows are computed (before/after dir listing
-    * of the touched partitions) and published atomically. First write
-    * bootstraps both table and manifest. A crash between the data
+  /** Past this estimated distinct-key count a keyed merge's anti-join
+    * shuffles the batch keys instead of broadcasting them, and its
+    * write keeps AQE: a backfill-scale key set — whether spread over
+    * 600 dates or packed into 2 — would make the broadcast the
+    * bottleneck (MergeStress's backfill and few-huge shapes). */
+  private val BroadcastMaxKeys = 500000L
+
+  /** ONE stats pass over a merge batch: the touched-partition IN-list
+    * (small by construction — one ingest covers few dates) and the
+    * key-cardinality estimate the join decision needs. The same
+    * aggregate counts null partition values and refuses them: the row
+    * would land under the `__HIVE_DEFAULT_PARTITION__` dir, which the
+    * IN-list (collect_set drops nulls) never names, so the commit
+    * would never register its file and every manifest-planned read
+    * would silently miss it. */
+  private def batchStats(updates: DataFrame, keys: Seq[String],
+                         partitionCol: String): (Seq[Any], Long) = {
+    // AQE off for the collect: a global agg's exchange carries one
+    // partial row per map task regardless of batch size (nothing to
+    // adapt), and AQE would materialize it as its own query-stage JOB —
+    // pure scheduler latency on every merge (JobCount r17)
+    val statsRow = graft.ScopedSessionConf.withConf(
+        updates.sparkSession, "spark.sql.adaptive.enabled", "false") {
+      updates.agg(
+        collect_set(col(partitionCol)).as("parts"),
+        approx_count_distinct(xxhash64(keys.map(col): _*)).as("key_est"),
+        count(when(col(partitionCol).isNull, lit(1))).as("null_parts"))
+        .collect().head
+    }
+    val nullParts = statsRow.getLong(2)
+    if (nullParts > 0)
+      throw new IllegalArgumentException(
+        s"$nullParts batch row(s) have a null partition column " +
+          s"'$partitionCol' — a keyed merge cannot register them")
+    (statsRow.getSeq[Any](0), statsRow.getLong(1))
+  }
+
+  /** The engine's keyed partitioned merge (S7 — the reference's
+    * `INSERT ... ON CONFLICT (date, region_id) DO UPDATE`), copy-on-write
+    * under the manifest: rows of `updates` replace same-key rows, and
+    * ONLY the partitions the batch touches are read and rewritten.
+    *  1. one stats pass over the batch (touched partitions + key
+    *     estimate, O(batch));
+    *  2. the touched partitions' existing rows, planned from the
+    *     pinned manifest (file list per partition, zero root listing —
+    *     MergeStress measured the O(partitions) recursive listing as
+    *     the dominant cost of incremental merges at 2400 partitions);
+    *  3. [[MergeUpsert.merge]], broadcasting the batch's key set while
+    *     its estimate stays under [[BroadcastMaxKeys]];
+    *  4. one file per touched date, rows sorted by the keys (clustered
+    *     row groups — parquet min/max stats prune key lookups inside
+    *     each date file);
+    *  5. APPENDED as new immutable files; the commit registers exactly
+    *     those and drops the touched partitions' old rows. The
+    *     superseded generation stays on disk for retained-version
+    *     readers and [[readVersion]] until [[vacuum]].
+    * No manifest yet means nothing to read: the batch is deduplicated
+    * on `keys` and written through the same layout and commit. Files
+    * under `path` that no manifest version registers are invisible to
+    * the merge, as to every manifest-planned read. A crash between the
     * append and the manifest publish leaves unreferenced files that no
-    * reader ever sees and [[vacuum]] reclaims — strictly safer than
-    * the in-place overwrite it replaces, which deleted files still
-    * referenced by retained manifest versions.
+    * reader ever sees and [[vacuum]] reclaims.
+    *
+    * Rows with a null `partitionCol` are refused
+    * (IllegalArgumentException) before anything is written.
     *
     * `zoneKey` picks the manifest's zone column (default `keys.head`);
     * it must stay the same across every publish to a table — mixed-key
@@ -383,24 +415,35 @@ object TableManifest {
     // interleaving anywhere in the merge+append span is refused at the
     // flip instead of silently unreferencing the other writer's publish
     val base = pin(spark, path)
-    // ONE stats pass serves this layer's touched-partition bookkeeping
-    // AND mergeWrite's broadcast decision (it would otherwise re-scan
-    // the batch for the same numbers — one whole Spark job per merge
-    // at streaming cadence)
-    val stats @ (touched, _) =
-      MergeUpsert.batchStats(updates, keys, partitionCol)
-    // when a manifest already exists, the merge's existing-rows read
-    // plans from it; new partitions simply resolve to no files
-    val resolver = base.manifest.map { m => (ts: Seq[Any]) =>
-      readFiles(spark, path, m,
-        keptFiles(m, ts.map(_.toString)).toIndexedSeq)
-    }
+    val (touched, keyEst) = batchStats(updates, keys, partitionCol)
+    val incremental = keyEst <= BroadcastMaxKeys
     commit(spark, path, base, partitionCol, touched,
       zoneKey.getOrElse(keys.head), retainVersions, dropParts = touched) {
-      MergeUpsert.mergeWrite(spark, path, updates, keys,
-        partitionCol, listingVia = resolver, cow = true,
-        precomputedStats = Some(stats))
+      val merged = base.manifest match {
+        case Some(m) =>
+          val existing = readFiles(spark, path, m,
+            keptFiles(m, touched.map(_.toString)).toIndexedSeq)
+          MergeUpsert.merge(existing, updates, keys,
+            broadcastKeys = incremental)
+        case None => updates.dropDuplicates(keys)
+      }
+      val laidOut = merged
+        .repartition(col(partitionCol)) // one task per date → one file per date
+        .sortWithinPartitions(keys.map(col): _*)
+      // incremental-sized batches also drop AQE for the write: the
+      // plan's exchanges (update dedup, the layout repartition) would
+      // each materialize as a sequential query-stage JOB, and an
+      // incremental merge has nothing for AQE to adapt. Backfill-scale
+      // batches keep AQE (skew + coalescing matter there).
+      if (incremental)
+        graft.ScopedSessionConf.withConf(spark,
+          "spark.sql.adaptive.enabled", "false") {
+          appendFiles(spark, path, laidOut, partitionCol)
+        }
+      else appendFiles(spark, path, laidOut, partitionCol)
     }
+    MergeUpsert.MergeWriteReport(touched.length, keyEst,
+      broadcastKeys = base.manifest.isDefined && incremental)
   }
 
   /** Wholesale COPY-ON-WRITE replacement of a PARTITION SET's
@@ -421,26 +464,22 @@ object TableManifest {
     * The first write BOOTSTRAPS (no manifest yet → nothing to drop):
     * replacePartitions doubles as the idempotent "this partition's
     * contents ARE this frame" writer (StreamCuration's epoch inserts).
+    * `landing` names every partition value `df` writes: only those
+    * dirs get the before/after listing (the dropped partitions leave
+    * the manifest by name), and a missed value leaves that dir's new
+    * files unregistered. Callers know it from how they built `df`, so
+    * `df` executes exactly once, in the write.
     * `replaceFiles` additionally drops specific files of other
     * partitions (the epoch stores' per-file steal rewrite). An empty
     * `df` that drops nothing publishes nothing. */
   def replacePartitions(spark: SparkSession, path: String, df: DataFrame,
                         keyCol: String, partitionCol: String,
                         replaceParts: Seq[Any],
+                        landing: Seq[Any],
                         retainVersions: Int = 2,
-                        landingParts: Option[Seq[Any]] = None,
                         replaceFiles: Seq[String] = Nil,
                         bloomKeys: Option[Seq[String]] = None): Unit = {
     val base = pin(spark, path)
-    // only the dirs receiving NEW files need the before/after listing;
-    // the dropped partitions are removed from the manifest by name.
-    // Callers that KNOW df's partition set pass it via `landingParts`
-    // (it must cover every partition value df writes — a missed value
-    // leaves that dir's new files unregistered) so df executes exactly
-    // once, in the write (r15 advice: compactCurated's fold plan was
-    // paid twice — once for this distinct-collect, once writing).
-    val landing = landingParts.getOrElse(
-      df.select(col(partitionCol)).distinct().collect().map(_.get(0)).toSeq)
     commit(spark, path, base, partitionCol, landing, keyCol, retainVersions,
       dropParts = replaceParts, dropFiles = replaceFiles,
       bloomKeys = bloomKeys)(appendFiles(spark, path, df, partitionCol))
@@ -493,8 +532,8 @@ object TableManifest {
     * as new files (no merge semantics — the caller owns key
     * uniqueness) and registers EXACTLY the files it wrote, leaving
     * every existing manifest row in place. This is the safe form of
-    * "external writer lands data on a live table": unlike [[update]]'s
-    * dir rescan it cannot resurrect superseded copy-on-write files,
+    * "external writer lands data on a live table": unlike a dir
+    * rescan it cannot resurrect superseded copy-on-write files,
     * because it never looks at files it didn't just create. */
   def appendManifested(spark: SparkSession, path: String, df: DataFrame,
                        keyCol: String, partitionCol: String = "date",
@@ -517,7 +556,7 @@ object TableManifest {
     *
     * Manifest-currency contract (applies to every manifest-planned
     * read here): files appended out-of-band and never registered via
-    * [[appendManifested]]/[[update]] are INVISIBLE — derived jobs
+    * [[appendManifested]] are INVISIBLE — derived jobs
     * reading through the manifest silently exclude them, they do not
     * fail. Register every out-of-band arrival before reading. */
   def readPartitions(spark: SparkSession, path: String, parts: Seq[Any],
@@ -574,7 +613,7 @@ object TableManifest {
                         zoneKey: Option[String] = None): CompactReport = {
     val base = pin(spark, path)
     val m = base.manifest
-      .getOrElse(sys.error(s"no manifest at $path — call update() first"))
+      .getOrElse(sys.error(s"no manifest at $path — not a manifested table"))
     // metadata actions at meta sizing (see commit)
     val (filesBefore, overParts) =
       graft.ScopedSessionConf.withMetaConf(spark, 4) {
@@ -1049,7 +1088,7 @@ object TableManifest {
   def readViaManifest(spark: SparkSession, path: String,
                       mergeSchema: Boolean = false): DataFrame = {
     val files = load(spark, path)
-      .getOrElse(sys.error(s"no manifest at $path — call update() first"))
+      .getOrElse(sys.error(s"no manifest at $path — not a manifested table"))
       .select("file").collect().map(_.getString(0))
     require(files.nonEmpty, s"manifest at $path lists no files")
     require(files.length <= MaxPlanFiles,
@@ -1073,7 +1112,7 @@ object TableManifest {
              partVal: Option[Any] = None)
       : (DataFrame, LookupReport) = {
     val m = load(spark, path)
-      .getOrElse(sys.error(s"no manifest at $path — call update() first"))
+      .getOrElse(sys.error(s"no manifest at $path — not a manifested table"))
     // The key's type comes from ONE manifest-listed file's footer,
     // never from a whole-table listing (the cost this path skips).
     val sample = m.select("file").limit(1).collect()
@@ -1135,7 +1174,7 @@ object TableManifest {
                             partitionCol: String = "date",
                             parts: Option[Seq[Any]] = None): Long = {
     val m = load(spark, path)
-      .getOrElse(sys.error(s"no manifest at $path — call update() first"))
+      .getOrElse(sys.error(s"no manifest at $path — not a manifested table"))
     val scoped = parts match {
       case Some(ps) => m.filter(col("part").isin(ps.map(_.toString): _*))
       case None => m

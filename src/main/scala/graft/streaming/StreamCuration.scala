@@ -187,7 +187,7 @@ object StreamCuration {
     // blocking (the batch already runs at micro shuffle sizing)
     TableManifest.replacePartitions(spark, path, df, keys.head, epochCol,
       replaceParts = Seq(epochStr),
-      landingParts = Some((epochStr +: firing.map(_._2)).distinct),
+      landing = (epochStr +: firing.map(_._2)).distinct,
       replaceFiles = firing.map(_._1),
       bloomKeys = Some(keys))
   }
@@ -307,38 +307,19 @@ object StreamCuration {
 
   private def readPointerFile(spark: SparkSession, workDir: String,
                               name: String): Option[String] = {
-    val fs = new org.apache.hadoop.fs.Path(curatedPath(workDir))
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val ptr = new org.apache.hadoop.fs.Path(curatedPath(workDir), name)
-    if (!fs.exists(ptr)) None
-    else {
-      val in = fs.open(ptr)
-      try {
-        val s = new String(
-          org.apache.hadoop.io.IOUtils.readFullyToByteArray(in),
-          java.nio.charset.StandardCharsets.UTF_8).trim
-        if (s.isEmpty) None else Some(s)
-      } finally in.close()
-    }
+    val dir = new org.apache.hadoop.fs.Path(curatedPath(workDir))
+    MergeUpsert.readPointer(
+      dir.getFileSystem(spark.sparkContext.hadoopConfiguration), dir, name)
   }
 
-  /** Atomically flip a curated pointer file (write-beside + rename,
-    * the same primitive as the stores' `_CURRENT` flips). */
+  /** Atomically flip a curated pointer file (the same write-beside +
+    * rename primitive as the stores' `_CURRENT` flips). */
   private def flipPointerFile(spark: SparkSession, workDir: String,
                               name: String, epoch: String): Unit = {
     val dir = new org.apache.hadoop.fs.Path(curatedPath(workDir))
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.mkdirs(dir)
-    val ptr = new org.apache.hadoop.fs.Path(dir, name)
-    val tmp = new org.apache.hadoop.fs.Path(dir, s"$name.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(epoch.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    if (!fs.rename(tmp, ptr)) {
-      fs.delete(ptr, false)
-      if (!fs.rename(tmp, ptr))
-        throw new java.io.IOException(s"cannot publish pointer $ptr")
-    }
+    MergeUpsert.writePointer(fs, dir, name, epoch)
   }
 
   private def start(spark: SparkSession, srcGlob: String,
@@ -961,12 +942,10 @@ object StreamCuration {
     val insertRows = sampled.join(embHit, Seq("doc_id"), "left")
       .withColumn(EpochCol, lit(tickEpoch))
       .coalesce(1).localCheckpoint()
-    // landingParts: the epoch stamp IS the only partition value, so
-    // the writer skips the landing distinct-collect job (per-tick
-    // latency: one fewer plan on the micro path)
+    // the epoch stamp IS the only partition value the rows land in
     TableManifest.replacePartitions(spark, curatedBasePath(workDir),
       insertRows, "doc_id", EpochCol, Seq(tickEpoch),
-      landingParts = Some(Seq(tickEpoch)))
+      landing = Seq(tickEpoch))
   }
 
   /** The absorbed-watermark pointer: the newest epoch whose docs and
@@ -1043,13 +1022,11 @@ object StreamCuration {
             .withColumn(EpochCol, lit(p))
             .repartition(foldWidth(spark, curatedBasePath(workDir),
               EpochCol, parts, targetBytes))
-          // landingParts = the fold's single epoch stamp, so the full
-          // readCurated composition executes ONCE (the write) instead
-          // of twice (r15 advice: the landing distinct-collect re-ran
-          // the whole fold plan before the write did)
+          // the fold lands in its single epoch stamp, so the full
+          // readCurated composition executes ONCE, in the write
           TableManifest.replacePartitions(spark, curatedBasePath(workDir),
             folded, "doc_id", EpochCol, parts,
-            landingParts = Some(Seq(p)))
+            landing = Seq(p))
           // crash between the fold's manifest flip and this prune
           // leaves stale vectors whose targets are already gone from
           // the base — the anti join is then a no-op, and the next
@@ -1131,7 +1108,7 @@ object StreamCuration {
             .sortWithinPartitions(keys.map(col): _*)
           TableManifest.replacePartitions(spark, path, folded, keys.head,
             epochCol, replaceParts = parts,
-            landingParts = Some(Seq(upTo)), bloomKeys = Some(keys))
+            landing = Seq(upTo), bloomKeys = Some(keys))
           (parts :+ upTo).distinct
         }
     }

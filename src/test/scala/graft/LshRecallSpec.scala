@@ -35,7 +35,7 @@ class LshRecallSpec extends SparkSpec {
     Iterator.iterate(200L)(_ + 1).filter(inSample).take(3).toSeq
 
   private lazy val fixtureDir: String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-recall").toString
+    val dir = tempDir("graft-recall").toString
     val distinct = (1 to 40).map { i =>
       (100000L + i, s"unique document number $i with entirely distinct " +
         s"content about topic-$i covering subject-$i matter-$i " +

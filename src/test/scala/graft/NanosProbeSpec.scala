@@ -35,7 +35,7 @@ class NanosProbeSpec extends SparkSpec {
         .named("ts")
       .required(PrimitiveTypeName.INT64).named("user_id")
       .named("events")
-    val work = java.nio.file.Files.createTempDirectory("graft-nanos").toString
+    val work = tempDir("graft-nanos").toString
     val writer = ExampleParquetWriter
       .builder(new org.apache.hadoop.fs.Path(s"$work/events.parquet"))
       .withType(schema).build()

@@ -133,8 +133,7 @@ class PropertySpec extends SparkSpec {
     } yield (k, seed)
     (1 to 3).foreach { _ =>
       val (k, seed) = sampled(splitGen)
-      val store = java.nio.file.Files
-        .createTempDirectory("graft-prop-inc").toString + "/sigs"
+      val store = tempDir("graft-prop-inc").toString + "/sigs"
       val order = new scala.util.Random(seed).shuffle((0 until k).toList)
       val got = order.map { part =>
         IncrementalDedup.appendBatch(spark, store,

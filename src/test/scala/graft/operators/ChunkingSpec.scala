@@ -178,8 +178,7 @@ class ChunkingSpec extends SparkSpec {
   test("cdc store: novelty curve attributes first-seen to the earliest " +
     "batch; a redelivered batch is a no-op") {
     import spark.implicits._
-    val store = java.nio.file.Files
-      .createTempDirectory("graft-cdc-spec").toString + "/ledger"
+    val store = tempDir("graft-cdc-spec").toString + "/ledger"
     val b0 = Seq((1L, longText)).toDF("doc_id", "text")
     // batch 1 re-ships batch 0's content under a new id plus one
     // genuinely new doc — its novelty must count only the new doc
@@ -205,8 +204,7 @@ class ChunkingSpec extends SparkSpec {
   test("cdc store: the grouped append converges to exactly the " +
     "sequential appends' state, one publish instead of N") {
     import spark.implicits._
-    val base = java.nio.file.Files
-      .createTempDirectory("graft-cdc-multi").toString
+    val base = tempDir("graft-cdc-multi").toString
     val b0 = Seq((1L, longText), (2L, "tiny doc here")).toDF("doc_id", "text")
     // batch 1 REDELIVERS doc 1 (same bytes — the ledger's contract)
     // alongside new content: the overlap exercises the in-group LWW

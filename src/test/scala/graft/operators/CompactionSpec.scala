@@ -6,8 +6,7 @@ import graft.SparkSpec
 class CompactionSpec extends SparkSpec {
   import spark.implicits._
 
-  private def tmp() = java.nio.file.Files
-    .createTempDirectory("graft-compact").toString + "/store"
+  private def tmp() = tempDir("graft-compact").toString + "/store"
 
   private def liveFiles(path: String): Seq[String] = {
     val v = MergeUpsert.currentPlainVersion(spark, path).get

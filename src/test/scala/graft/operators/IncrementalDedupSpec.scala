@@ -2,7 +2,6 @@ package graft.operators
 
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
-import java.nio.file.Files
 
 class IncrementalDedupSpec extends SparkSpec {
 
@@ -15,7 +14,7 @@ class IncrementalDedupSpec extends SparkSpec {
   test("x38 invariant: union of per-append candidates == from-scratch " +
     "LSH on the union corpus") {
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-    val store = Files.createTempDirectory("graft-incd").toString + "/sigs"
+    val store = tempDir("graft-incd").toString + "/sigs"
     val emissions = (0 until 3).map { k =>
       val batch = docs.filter(col("doc_id") % 3 === k)
       // materialize each emission before the next append shifts the
@@ -38,7 +37,7 @@ class IncrementalDedupSpec extends SparkSpec {
   test("re-appending a batch is idempotent on the store and re-emits " +
     "only that batch's pairs") {
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-    val store = Files.createTempDirectory("graft-incd2").toString + "/sigs"
+    val store = tempDir("graft-incd2").toString + "/sigs"
     val b0 = docs.filter(col("doc_id") % 2 === 0)
     val b1 = docs.filter(col("doc_id") % 2 === 1)
     val e0 = pairSet(IncrementalDedup
@@ -59,7 +58,7 @@ class IncrementalDedupSpec extends SparkSpec {
   test("x41 invariant: exact-dup report over appends == from-scratch " +
     "exact dedup, and redelivery does not double-count") {
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-    val store = Files.createTempDirectory("graft-ince").toString + "/hashes"
+    val store = tempDir("graft-ince").toString + "/hashes"
     def rep(df: org.apache.spark.sql.DataFrame) =
       df.select("text_hash", "keep_id", "n_copies").collect()
         .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
@@ -78,7 +77,7 @@ class IncrementalDedupSpec extends SparkSpec {
 
   test("store growth is bounded: version retention holds across appends") {
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-    val store = Files.createTempDirectory("graft-incd3").toString + "/sigs"
+    val store = tempDir("graft-incd3").toString + "/sigs"
     for (k <- 0 until 4)
       IncrementalDedup.appendBatch(spark, store, docs
         .filter(col("doc_id") % 4 === k), "doc_id", "text").count()

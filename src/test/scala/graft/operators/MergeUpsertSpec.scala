@@ -2,7 +2,6 @@ package graft.operators
 
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
-import java.nio.file.Files
 
 class MergeUpsertSpec extends SparkSpec {
   import spark.implicits._
@@ -37,7 +36,7 @@ class MergeUpsertSpec extends SparkSpec {
   }
 
   test("S7 mergeWritePlain: versioned publish survives a crashed writer") {
-    val dir = Files.createTempDirectory("graft-plain").toString + "/t"
+    val dir = tempDir("graft-plain").toString + "/t"
     MergeUpsert.mergeWritePlain(spark, dir,
       tbl(("2024-01-15", "CA", 100)), Seq("date", "region_id"))
     assert(MergeUpsert.readPlain(spark, dir)
@@ -70,7 +69,7 @@ class MergeUpsertSpec extends SparkSpec {
   }
 
   test("S7 mergeWritePlain: retainVersions widens the reader window") {
-    val dir = Files.createTempDirectory("graft-retain").toString + "/t"
+    val dir = tempDir("graft-retain").toString + "/t"
     def versions = new java.io.File(dir).listFiles().map(_.getName)
       .filter(_.startsWith("v-")).sorted.toSeq
     for (i <- 1 to 4)
@@ -91,7 +90,7 @@ class MergeUpsertSpec extends SparkSpec {
 
   test("S7 mergeWritePlain: reader window survives committers that " +
     "write no _SUCCESS markers") {
-    val dir = Files.createTempDirectory("graft-nosucc").toString + "/t"
+    val dir = tempDir("graft-nosucc").toString + "/t"
     MergeUpsert.mergeWritePlain(spark, dir,
       tbl(("2024-01-15", "CA", 1)), Seq("date", "region_id"))
     // simulate mapreduce.fileoutputcommitter.marksuccessfuljobs=false
@@ -111,7 +110,7 @@ class MergeUpsertSpec extends SparkSpec {
 
   test("S7 mergeWritePlain: lost pointer + no _SUCCESS markers recovers " +
     "to the newest version instead of wiping the table") {
-    val dir = Files.createTempDirectory("graft-lostptr").toString + "/t"
+    val dir = tempDir("graft-lostptr").toString + "/t"
     MergeUpsert.mergeWritePlain(spark, dir,
       tbl(("2024-01-15", "CA", 1)), Seq("date", "region_id"))
     MergeUpsert.mergeWritePlain(spark, dir,
@@ -153,7 +152,7 @@ class MergeUpsertSpec extends SparkSpec {
 
   test("S7 publishPlain: whole-table replace can SHRINK the row set, " +
     "atomically versioned") {
-    val dir = Files.createTempDirectory("graft-pub").toString + "/t"
+    val dir = tempDir("graft-pub").toString + "/t"
     MergeUpsert.publishPlain(spark, dir,
       tbl(("2024-01-15", "CA", 1), ("2024-01-15", "TX", 2)))
     assert(MergeUpsert.readPlain(spark, dir).count() == 2)
@@ -167,7 +166,7 @@ class MergeUpsertSpec extends SparkSpec {
   }
 
   test("S7 mergeWritePlain: legacy flat tables migrate on first merge") {
-    val dir = Files.createTempDirectory("graft-flat").toString + "/t"
+    val dir = tempDir("graft-flat").toString + "/t"
     tbl(("2024-01-15", "CA", 100), ("2024-01-15", "TX", 200))
       .write.parquet(dir) // pre-versioning layout
     MergeUpsert.mergeWritePlain(spark, dir,
@@ -180,54 +179,61 @@ class MergeUpsertSpec extends SparkSpec {
       "migrated flat files are cleaned after the version goes live")
   }
 
-  test("S7 mergeWrite rewrites only touched date partitions") {
-    val dir = Files.createTempDirectory("graft-merge").toString + "/fact"
+  test("S7 mergeWriteManifested rewrites only touched date partitions") {
+    val dir = tempDir("graft-merge").toString + "/fact"
+    val keys = Seq("date", "region_id")
     val init = tbl(("2024-01-15", "CA", 100), ("2024-01-16", "CA", 200))
-    MergeUpsert.mergeWrite(spark, dir, init, Seq("date", "region_id"))
-    val filesBefore = new java.io.File(s"$dir/date=2024-01-16").listFiles().toSet
+    TableManifest.mergeWriteManifested(spark, dir, init, keys)
+    def files(date: String) =
+      new java.io.File(s"$dir/date=$date").listFiles().toSet
+    def manifestRows(date: String) = TableManifest.load(spark, dir).get
+      .filter(col("part") === date).collect().toSet
+    val filesBefore = files("2024-01-16")
+    val rowsBefore = manifestRows("2024-01-16")
     // second merge touches only 2024-01-15
-    MergeUpsert.mergeWrite(spark, dir,
-      tbl(("2024-01-15", "CA", 150)), Seq("date", "region_id"))
-    val filesAfter = new java.io.File(s"$dir/date=2024-01-16").listFiles().toSet
-    assert(filesBefore == filesAfter, "untouched partition must not be rewritten")
-    val got = spark.read.parquet(dir)
+    TableManifest.mergeWriteManifested(spark, dir,
+      tbl(("2024-01-15", "CA", 150)), keys)
+    assert(files("2024-01-16") == filesBefore &&
+      manifestRows("2024-01-16") == rowsBefore,
+      "untouched partition must not be rewritten")
+    val got = TableManifest.readViaManifest(spark, dir)
       .orderBy("date").select("total_beds").as[Int].collect()
     assert(got.toSeq == Seq(150, 200))
   }
 
-  test("mergeWrite gates broadcast on key estimate, not partition count") {
-    val dir = Files.createTempDirectory("graft-mergegate").toString + "/fact"
+  test("merge broadcast gates on key estimate, not partition count") {
+    val dir = tempDir("graft-mergegate").toString + "/fact"
     def rows(tag: String, n: Long, dates: Int) = spark.range(n).select(
       date_add(lit("2024-01-01").cast("date"),
         (col("id") % dates).cast("int")).as("date"),
       concat(lit(tag), col("id")).as("region_id"),
       lit(1).as("total_beds"))
-    val create = MergeUpsert.mergeWrite(spark, dir, rows("c", 100, 4),
-      Seq("date", "region_id"))
-    assert(create == MergeUpsert.MergeWriteReport(0, 0L, false),
-      "create path plans no join")
+    def merge(batch: org.apache.spark.sql.DataFrame) =
+      TableManifest.mergeWriteManifested(spark, dir, batch,
+        Seq("date", "region_id"))
+    val create = merge(rows("c", 100, 4))
+    assert(create.touchedPartitions == 4 && !create.broadcastKeys,
+      s"first write plans no join: $create")
     // small batch, few keys -> broadcast
-    val small = MergeUpsert.mergeWrite(spark, dir, rows("s", 50, 2),
-      Seq("date", "region_id"))
+    val small = merge(rows("s", 50, 2))
     assert(small.touchedPartitions == 2 && small.broadcastKeys,
       s"small batch should broadcast: $small")
-    // few-but-HUGE: 2 touched dates, keys far past the threshold ->
+    // few-but-HUGE: 2 touched dates, keys past the 500k threshold ->
     // shuffle (a partition-count gate would broadcast here)
-    val fewHuge = MergeUpsert.mergeWrite(spark, dir, rows("h", 40000, 2),
-      Seq("date", "region_id"), broadcastMaxKeys = 10000L)
+    val fewHuge = merge(rows("h", 600000, 2))
     assert(fewHuge.touchedPartitions == 2 && !fewHuge.broadcastKeys,
       s"few-but-huge batch must shuffle: $fewHuge")
     // the estimate is approximate (HLL) but must be in the right decade
-    assert(fewHuge.keyEstimate > 30000L && fewHuge.keyEstimate < 50000L,
+    assert(fewHuge.keyEstimate > 500000L && fewHuge.keyEstimate < 700000L,
       s"key estimate off: $fewHuge")
     // correctness unaffected by the join strategy (tags disjoint ->
     // every batch row inserts)
-    assert(spark.read.parquet(dir).count() == 100L + 50L + 40000L)
+    assert(TableManifest.readViaManifest(spark, dir).count() ==
+      100L + 50L + 600000L)
   }
 
   test("additive merge sums per key; store bootstrap sums in-batch dups") {
-    val store = java.nio.file.Files
-      .createTempDirectory("graft-addm").toString + "/counts"
+    val store = tempDir("graft-addm").toString + "/counts"
     // bootstrap: in-batch duplicate keys must SUM, not collapse
     MergeUpsert.mergeAdditiveWritePlain(spark, store,
       Seq(("a", 2L), ("b", 1L), ("a", 3L)).toDF("term", "freq"),
@@ -241,8 +247,7 @@ class MergeUpsertSpec extends SparkSpec {
   }
 
   test("deleteWhere removes matching rows atomically, no-ops on no match") {
-    val store = java.nio.file.Files
-      .createTempDirectory("graft-del").toString + "/t"
+    val store = tempDir("graft-del").toString + "/t"
     MergeUpsert.mergeWritePlain(spark, store,
       Seq((1L, "en"), (2L, "de"), (3L, "en")).toDF("id", "lang"), Seq("id"))
     val v1 = MergeUpsert.currentPlainVersion(spark, store)
@@ -258,8 +263,7 @@ class MergeUpsertSpec extends SparkSpec {
   }
 
   test("deleteWhere keeps NULL-condition rows (they are not matches)") {
-    val store = java.nio.file.Files
-      .createTempDirectory("graft-delnull").toString + "/t"
+    val store = tempDir("graft-delnull").toString + "/t"
     MergeUpsert.mergeWritePlain(spark, store,
       Seq((1L, Some("en")), (2L, Some("de")), (3L, Option.empty[String]))
         .toDF("id", "lang"), Seq("id"))
@@ -271,8 +275,7 @@ class MergeUpsertSpec extends SparkSpec {
   }
 
   test("additive merge refuses to narrow a wider store's schema") {
-    val store = java.nio.file.Files
-      .createTempDirectory("graft-addnarrow").toString + "/t"
+    val store = tempDir("graft-addnarrow").toString + "/t"
     MergeUpsert.mergeWritePlain(spark, store,
       Seq(("a", 1L, "keepme")).toDF("term", "freq", "extra"), Seq("term"))
     val e = intercept[IllegalArgumentException] {
@@ -287,8 +290,7 @@ class MergeUpsertSpec extends SparkSpec {
 
   test("time travel + version diff: insert/update/delete detected, " +
     "null-discriminating row hash") {
-    val store = java.nio.file.Files
-      .createTempDirectory("graft-diff").toString + "/t"
+    val store = tempDir("graft-diff").toString + "/t"
     MergeUpsert.mergeWritePlain(spark, store,
       Seq((1L, Some("a"), Some("")), (2L, Some("b"), Some("x")),
         (3L, Some("c"), Some("y"))).toDF("id", "u", "v"), Seq("id"),
@@ -336,7 +338,7 @@ class MergeUpsertSpec extends SparkSpec {
 
   test("concurrent publish: a moved pointer is detected and refused, " +
     "never silently clobbered") {
-    val dir = Files.createTempDirectory("graft-concur").toString + "/t"
+    val dir = tempDir("graft-concur").toString + "/t"
     val keys = Seq("date", "region_id")
     MergeUpsert.mergeWritePlain(spark, dir,
       tbl(("2024-01-15", "CA", 100)), keys)
@@ -383,7 +385,7 @@ class MergeUpsertSpec extends SparkSpec {
 
   test("concurrent publish guard: an unmoved pointer still publishes " +
     "(no false positive), including the fresh-table first publish") {
-    val dir = Files.createTempDirectory("graft-concur2").toString + "/t"
+    val dir = tempDir("graft-concur2").toString + "/t"
     val keys = Seq("date", "region_id")
     // fresh table: cur = None, and the guard must not trip on its own
     // freshly marked dir winning the lost-pointer fallback
@@ -407,7 +409,7 @@ class MergeUpsertSpec extends SparkSpec {
   private lazy val queries = corpus.filter(col("vec_id") < 3)
 
   test("IVF probe from stored centroids equals train-in-query") {
-    val store = Files.createTempDirectory("graft-ivf-spec").toString
+    val store = tempDir("graft-ivf-spec").toString
     val cents = Similarity.kmeansCentroids(
       corpus, "vec_id", "embedding", k = 4, iters = 2)
     MergeUpsert.publishPlain(spark, store, cents)
@@ -421,7 +423,7 @@ class MergeUpsertSpec extends SparkSpec {
   }
 
   test("PQ probe from stored codebooks equals train-in-query") {
-    val store = Files.createTempDirectory("graft-pq-spec").toString
+    val store = tempDir("graft-pq-spec").toString
     MergeUpsert.publishPlain(spark, store, Similarity.pqCodebooks(
       corpus, "vec_id", "embedding", m = 2, k = 4, iters = 1))
     val fromStore = Similarity.pqTopKWith(queries, corpus,
@@ -440,7 +442,7 @@ class MergeUpsertSpec extends SparkSpec {
       .toDF("doc_id", "text")
     val bench = docs.filter(col("doc_id") % 5 === 0)
     val scan = docs.filter(col("doc_id") % 5 =!= 0)
-    val store = Files.createTempDirectory("graft-bloom-spec").toString
+    val store = tempDir("graft-bloom-spec").toString
     MergeUpsert.publishPlain(spark, store,
       BloomFilter.trainBloom(bench, "text", shingleN = 3, m = 1 << 10, k = 3))
     val fromStore = BloomFilter.flagBloomWith(scan, "doc_id", "text",
@@ -453,7 +455,7 @@ class MergeUpsertSpec extends SparkSpec {
   }
 
   test("publish flips atomically and retains the superseded version") {
-    val store = Files.createTempDirectory("graft-store-vers").toString
+    val store = tempDir("graft-store-vers").toString
     val v1 = Seq((1L, Seq(1.0, 2.0))).toDF("cid", "cvec")
     val v2 = Seq((2L, Seq(3.0, 4.0))).toDF("cid", "cvec")
     MergeUpsert.publishPlain(spark, store, v1)

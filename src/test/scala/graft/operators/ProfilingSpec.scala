@@ -301,7 +301,7 @@ class ProfilingSpec extends SparkSpec {
       ("g", 0.0004)) ++ Seq(("h", 0.5))).toDF("grp", "v")
       .withColumn("id", monotonically_increasing_id())
     def store(splits: Seq[org.apache.spark.sql.DataFrame]): String = {
-      val p = java.nio.file.Files.createTempDirectory("graft-qs")
+      val p = tempDir("graft-qs")
         .toString + "/h"
       splits.foreach(b =>
         Profiling.appendValueCounts(spark, p, b, "grp", "v"))
@@ -325,7 +325,7 @@ class ProfilingSpec extends SparkSpec {
     assert(got(("h", 50)) == ((1L, 0.5)))
     // NULLs excluded, p100 = max
     val withNull = Seq(("g", Some(1.0)), ("g", None)).toDF("grp", "v")
-    val p2 = java.nio.file.Files.createTempDirectory("graft-qs2")
+    val p2 = tempDir("graft-qs2")
       .toString + "/h"
     Profiling.appendValueCounts(spark, p2, withNull, "grp", "v")
     val m = Profiling.quantilesFromStore(
@@ -337,7 +337,7 @@ class ProfilingSpec extends SparkSpec {
     "re-run drops nothing, next append still merges additively") {
     val spark2 = spark
     import spark2.implicits._
-    val p = java.nio.file.Files.createTempDirectory("graft-qsc")
+    val p = tempDir("graft-qsc")
       .toString + "/h"
     val df = (1 to 40).map(i => ("g", i * 0.001)).toDF("grp", "v")
       .withColumn("id", monotonically_increasing_id())

@@ -57,7 +57,7 @@ class RegressionSpec extends SparkSpec {
 
   test("ingest: across files, the lexically-later file wins duplicate keys " +
     "regardless of split layout") {
-    val base = java.nio.file.Files.createTempDirectory("graft-reg-mf").toString
+    val base = tempDir("graft-reg-mf").toString
     val hdr = "date,state,inpatient_beds,inpatient_beds_used," +
       "total_staffed_adult_icu_beds,staffed_adult_icu_bed_occupancy"
     // the same (date, region) key in two files; file b is much smaller,
@@ -84,7 +84,7 @@ class RegressionSpec extends SparkSpec {
   }
 
   test("ingest: in-batch duplicate key keeps the LAST file row (reference order)") {
-    val base = java.nio.file.Files.createTempDirectory("graft-reg").toString
+    val base = tempDir("graft-reg").toString
     val csv =
       """date,state,inpatient_beds,inpatient_beds_used,total_staffed_adult_icu_beds,staffed_adult_icu_bed_occupancy
         |2024-01-15,California,50000,40000,5000,4000

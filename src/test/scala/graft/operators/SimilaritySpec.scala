@@ -291,8 +291,7 @@ class SimilaritySpec extends SparkSpec {
       k = 4, iters = 2)
     val fromScratch = Similarity.ivfTopKWith(q, corpus, "vec_id",
       "embedding", k = 5, cents, nProbe = 2).collect().toSeq
-    val store = java.nio.file.Files
-      .createTempDirectory("graft-ivfpost").toString + "/p"
+    val store = tempDir("graft-ivfpost").toString + "/p"
     // uneven batches, one redelivered — dedup by assignment determinism
     Seq(0L, 1L, 1L, 2L).foreach { b =>
       Similarity.appendIvfPostings(spark, store,
@@ -327,8 +326,7 @@ class SimilaritySpec extends SparkSpec {
     val q = all.filter($"vec_id" % 2 === 0 && $"vec_id" < 60)
     val cents = Similarity.kmeansCentroids(corpus, "vec_id", "embedding",
       k = 8, iters = 2)
-    val store = java.nio.file.Files
-      .createTempDirectory("graft-adcpost").toString + "/p"
+    val store = tempDir("graft-adcpost").toString + "/p"
     Similarity.appendIvfPostings(spark, store, corpus,
       "vec_id", "embedding", cents)
     val postings = MergeUpsert.readPlain(spark, store)

@@ -63,8 +63,7 @@ class SketchesSpec extends SparkSpec {
       .select("g", "sketch").collect()
       .map(r => r.getString(0) -> r.getSeq[Long](1)).toMap
     Seq(Seq(0, 1, 2), Seq(2, 0, 1)).foreach { order =>
-      val store = java.nio.file.Files
-        .createTempDirectory("graft-kmvstore").toString + "/s"
+      val store = tempDir("graft-kmvstore").toString + "/s"
       order.foreach { p =>
         Sketches.appendSketch(spark, store,
           rows.filter(hash(col("v")) % 3 === p || hash(col("v")) % 3 === p - 3),
@@ -84,8 +83,7 @@ class SketchesSpec extends SparkSpec {
       hash(col("v")) % 2 === -1)
     val half2 = rows.exceptAll(half1)
     // legacy layout: the first half's sketches as BARE parquet files
-    val store = java.nio.file.Files
-      .createTempDirectory("graft-kmvflat").toString + "/s"
+    val store = tempDir("graft-kmvflat").toString + "/s"
     Sketches.kmvSketch(half1, "g", col("v"), K, M)
       .select("g", "sketch").write.parquet(store)
     // an append must MERGE with the flat base (and adopt the layout),
@@ -171,8 +169,7 @@ class SketchesSpec extends SparkSpec {
       .select("g", "registers").collect()
       .map(r => r.getString(0) -> r.getSeq[Long](1)).toMap
     Seq(Seq(0, 1, 2), Seq(2, 0, 1)).foreach { order =>
-      val store = java.nio.file.Files
-        .createTempDirectory("graft-hllstore").toString + "/s"
+      val store = tempDir("graft-hllstore").toString + "/s"
       order.foreach { p =>
         Sketches.appendHll(spark, store,
           rows.filter(hash(col("v")) % 3 === p || hash(col("v")) % 3 === p - 3),
@@ -189,8 +186,7 @@ class SketchesSpec extends SparkSpec {
     // max-merge needs no batch-id bookkeeping: re-appending the same
     // batch cannot change any register
     val rows = (1 to 300).map(i => (s"g${i % 2}", s"tok$i")).toDF("g", "v")
-    val store = java.nio.file.Files
-      .createTempDirectory("graft-hllredeliver").toString + "/s"
+    val store = tempDir("graft-hllredeliver").toString + "/s"
     Sketches.appendHll(spark, store, rows, "g", col("v"), HllP)
     val once = MergeUpsert.readPlain(spark, store)
       .select("g", "registers").collect()
@@ -230,7 +226,7 @@ class SketchesSpec extends SparkSpec {
       (i.toLong, if (i % 2 == 0) "alpha beta" else "alpha gamma delta"))
       .toDF("doc_id", "text")
     def store(splits: Seq[org.apache.spark.sql.DataFrame]): String = {
-      val p = java.nio.file.Files.createTempDirectory("graft-cms-t")
+      val p = tempDir("graft-cms-t")
         .toString + "/s"
       splits.foreach(b => Sketches.appendCms(spark, p, b, "text",
         depth = 2, width = 64))
@@ -255,7 +251,7 @@ class SketchesSpec extends SparkSpec {
   test("cmsTopKWith: probe terms the store never sketched report " +
     "est_cnt 0 (one-sided error holds on uncovered probes)") {
     val sketched = Seq((1L, "alpha beta")).toDF("doc_id", "text")
-    val p = java.nio.file.Files.createTempDirectory("graft-cms-u")
+    val p = tempDir("graft-cms-u")
       .toString + "/s"
     Sketches.appendCms(spark, p, sketched, "text", depth = 2, width = 64)
     // probe corpus has tokens the sketch never saw — their (d, bkt)

@@ -9,7 +9,7 @@ class StreamIngestSpec extends SparkSpec {
   import graft.streaming.StreamIngest
 
   test("availableNow drains are exactly-once per file and upsert on key") {
-    val work = java.nio.file.Files.createTempDirectory("graft-ss").toString
+    val work = tempDir("graft-ss").toString
     java.nio.file.Files.createDirectory(java.nio.file.Paths.get(s"$work/in"))
     val schema = StructType(Seq(
       StructField("k", LongType), StructField("v", StringType)))
@@ -41,7 +41,7 @@ class StreamIngestSpec extends SparkSpec {
 
   test("manifested availableNow drain: post-drain manifest matches the " +
     "batch-built twin; redelivery idempotent under manifest maintenance") {
-    val work = java.nio.file.Files.createTempDirectory("graft-ssm").toString
+    val work = tempDir("graft-ssm").toString
     java.nio.file.Files.createDirectory(java.nio.file.Paths.get(s"$work/in"))
     val schema = StructType(Seq(
       StructField("k", LongType), StructField("v", StringType),
@@ -92,7 +92,7 @@ class StreamIngestSpec extends SparkSpec {
 
   test("vacuumEvery bounds copy-on-write growth at streaming cadence: " +
     "post-drain storage equals the live file set, content unchanged") {
-    val work = java.nio.file.Files.createTempDirectory("graft-ssv").toString
+    val work = tempDir("graft-ssv").toString
     java.nio.file.Files.createDirectory(java.nio.file.Paths.get(s"$work/in"))
     val schema = StructType(Seq(
       StructField("k", LongType), StructField("v", StringType),
@@ -141,7 +141,7 @@ class StreamIngestSpec extends SparkSpec {
 
   test("crash between manifest flip and checkpoint commit: restart " +
     "replays the uncommitted batch and converges byte-identically") {
-    val work = java.nio.file.Files.createTempDirectory("graft-sscr").toString
+    val work = tempDir("graft-sscr").toString
     java.nio.file.Files.createDirectory(java.nio.file.Paths.get(s"$work/in"))
     val schema = StructType(Seq(
       StructField("k", LongType), StructField("v", StringType),
@@ -201,7 +201,7 @@ class StreamIngestSpec extends SparkSpec {
 
   test("continuous trigger: micro-batches merge as files arrive, and a " +
        "restart from checkpoint resumes exactly-once") {
-    val work = java.nio.file.Files.createTempDirectory("graft-cont").toString
+    val work = tempDir("graft-cont").toString
     java.nio.file.Files.createDirectory(java.nio.file.Paths.get(s"$work/in"))
     val schema = StructType(Seq(
       StructField("k", LongType), StructField("v", StringType)))
@@ -247,7 +247,7 @@ class StreamIngestSpec extends SparkSpec {
   }
 
   test("compaction cadence bounds live-version file decay under streaming") {
-    val work = java.nio.file.Files.createTempDirectory("graft-scomp").toString
+    val work = tempDir("graft-scomp").toString
     java.nio.file.Files.createDirectory(java.nio.file.Paths.get(s"$work/in"))
     val schema = StructType(Seq(
       StructField("k", LongType), StructField("v", StringType)))

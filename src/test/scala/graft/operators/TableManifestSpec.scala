@@ -7,7 +7,7 @@ class TableManifestSpec extends SparkSpec {
   import spark.implicits._
 
   private def tmpDir(): String =
-    java.nio.file.Files.createTempDirectory("graft-manifest").toString + "/t"
+    tempDir("graft-manifest").toString + "/t"
 
   private def rows(d: String, ids: Seq[Long], v: Double) =
     ids.map(i => (i, d, v)).toDF("id", "date", "value")
@@ -114,12 +114,10 @@ class TableManifestSpec extends SparkSpec {
       rows("2024-01-01", 1L to 20L, 1.0)
         .unionByName(rows("2024-01-02", 21L to 40L, 1.0)),
       keys = Seq("id"))
-    // …then an external task-parallel APPEND fragments 2024-01-02
-    // (4 extra small files) and the manifest is refreshed to track it
-    rows("2024-01-02", 41L to 60L, 2.0).repartition(4)
-      .write.mode("append").partitionBy("date").parquet(path)
-    spark.catalog.refreshByPath(path)
-    TableManifest.update(spark, path, "date", Seq("2024-01-02"), "id")
+    // …then a task-parallel APPEND fragments 2024-01-02 (4 extra
+    // small files, each registered in the manifest)
+    TableManifest.appendManifested(spark, path,
+      rows("2024-01-02", 41L to 60L, 2.0).repartition(4), keyCol = "id")
     val before = TableManifest.load(spark, path).get.collect()
     val beforeByPart = before.groupBy(_.getString(1))
     assert(beforeByPart("2024-01-02").length == 5)
@@ -247,7 +245,7 @@ class TableManifestSpec extends SparkSpec {
     TableManifest.mergeWriteManifested(spark, path,
       rows("2024-01-01", 1L to 20L, 1.0), keys = Seq("id"))
     // rewrite once so the partition dir holds a SUPERSEDED file — the
-    // state where update()'s dir rescan would resurrect it
+    // state where a dir rescan would resurrect it
     TableManifest.mergeWriteManifested(spark, path,
       rows("2024-01-01", 11L to 25L, 2.0), keys = Seq("id"))
     assert(TableManifest.readViaManifest(spark, path).count() == 25L)
@@ -441,9 +439,9 @@ class TableManifestSpec extends SparkSpec {
   // writer ends in the same pinned-base commit, so each must refuse an
   // interleaved publish and survive a crash at the commit seam ----
 
-  /** The table every writer case starts from: two partitions, a second
-    * registered file in 2024-01-02 (for the compaction to fold) and an
-    * out-of-band landing in 2024-01-03 (for update to register). */
+  /** The table every writer case starts from: two partitions and a
+    * second registered file in 2024-01-02 (for the compaction to
+    * fold). */
   private def writerTable(): String = {
     val path = tmpDir()
     TableManifest.mergeWriteManifested(spark, path,
@@ -452,15 +450,10 @@ class TableManifestSpec extends SparkSpec {
       keys = Seq("id"))
     TableManifest.appendManifested(spark, path,
       rows("2024-01-02", 41L to 45L, 1.0), keyCol = "id")
-    rows("2024-01-03", 46L to 50L, 1.0)
-      .write.mode("append").partitionBy("date").parquet(path)
-    spark.catalog.refreshByPath(path)
     path
   }
 
   private val writers: Seq[(String, String => Unit)] = Seq(
-    "update" -> (p =>
-      TableManifest.update(spark, p, "date", Seq("2024-01-03"), "id")),
     "mergeWriteManifested" -> { p =>
       TableManifest.mergeWriteManifested(spark, p,
         rows("2024-01-01", 1L to 5L, 2.0), keys = Seq("id"))
@@ -472,7 +465,7 @@ class TableManifestSpec extends SparkSpec {
     "replacePartitions" -> (p =>
       TableManifest.replacePartitions(spark, p,
         rows("2024-01-01", 1L to 3L, 4.0), "id", "date",
-        Seq("2024-01-01"))),
+        Seq("2024-01-01"), landing = Seq("2024-01-01"))),
     "compactManifested" -> { p =>
       TableManifest.compactManifested(spark, p, keyCol = "id")
       ()
@@ -542,8 +535,7 @@ class TableManifestSpec extends SparkSpec {
       val live = liveFiles(path)
       assert(live.subsetOf(dataFiles(path)), s"$name: dangling manifest ref")
       val orphans = dataFiles(path) -- onDisk -- live
-      if (name != "update") // the bootstrap rescan writes no data
-        assert(orphans.nonEmpty, s"$name: the loser's files stay on disk")
+      assert(orphans.nonEmpty, s"$name: the loser's files stay on disk")
       // the documented recovery: re-run against the fresh base
       write(path)
       assert(image(path) == image(aThenB), s"$name: retry must converge")
@@ -579,6 +571,28 @@ class TableManifestSpec extends SparkSpec {
     }
   }
 
+  test("mergeWriteManifested refuses a batch with a null partition " +
+    "value before writing; the table keeps its pre-image") {
+    val path = tmpDir()
+    TableManifest.mergeWriteManifested(spark, path,
+      rows("2024-01-01", 1L to 5L, 1.0), keys = Seq("id"))
+    val pre = image(path)
+    val versions = TableManifest.versions(spark, path)
+    val onDisk = dataFiles(path)
+    // the null-date row would land under date=__HIVE_DEFAULT_PARTITION__,
+    // a dir the commit never lists — silently unregistered
+    val batch = rows("2024-01-01", 4L to 6L, 2.0)
+      .unionByName(Seq((7L, null: String, 2.0)).toDF("id", "date", "value"))
+    val e = intercept[IllegalArgumentException] {
+      TableManifest.mergeWriteManifested(spark, path, batch, keys = Seq("id"))
+    }
+    assert(e.getMessage.contains("'date'"), e.getMessage)
+    assert(TableManifest.versions(spark, path) == versions,
+      "a refused batch publishes no manifest version")
+    assert(image(path) == pre, "readers must see the pre-image")
+    assert(dataFiles(path) == onDisk, "a refused batch writes no data")
+  }
+
   private def epochRows(e: String, ids: Seq[Long], v: Double) =
     ids.map(i => (i, e, v)).toDF("id", "ep", "value")
 
@@ -593,7 +607,7 @@ class TableManifestSpec extends SparkSpec {
     val keys = Seq("id")
     Seq("e1" -> (1L to 10L), "e2" -> (11L to 20L)).foreach { case (e, ids) =>
       TableManifest.replacePartitions(spark, path, epochRows(e, ids, 1.0),
-        "id", "ep", Seq(e), bloomKeys = Some(keys))
+        "id", "ep", Seq(e), landing = Seq(e), bloomKeys = Some(keys))
     }
     def manifestFiles(part: String) = TableManifest.load(spark, path).get
       .filter(col("part") === part).select("file").collect()
@@ -613,7 +627,7 @@ class TableManifestSpec extends SparkSpec {
       .join(batch.select("id"), Seq("id"), "left_anti")
     TableManifest.replacePartitions(spark, path, batch.unionByName(victims),
       "id", "ep", Seq("e3"),
-      landingParts = Some(Seq("e3", "e1")),
+      landing = Seq("e3", "e1"),
       replaceFiles = firing.map(_._1), bloomKeys = Some(keys))
     assert(epochWorld(path) ==
       ((1L to 10L).filter(_ != 5L).map(i => (i, "e1", 1.0)) ++
@@ -631,19 +645,20 @@ class TableManifestSpec extends SparkSpec {
     val path = tmpDir()
     val empty = epochRows("e9", Nil, 0.0)
     TableManifest.replacePartitions(spark, path, empty, "id", "ep",
-      Seq("e9"), landingParts = Some(Seq("e9")))
+      Seq("e9"), landing = Seq("e9"))
     assert(TableManifest.load(spark, path).isEmpty,
       "an empty batch on an absent table creates no manifest")
     TableManifest.replacePartitions(spark, path,
-      epochRows("e1", 1L to 10L, 1.0), "id", "ep", Seq("e1"))
+      epochRows("e1", 1L to 10L, 1.0), "id", "ep", Seq("e1"),
+      landing = Seq("e1"))
     val v0 = TableManifest.versions(spark, path)
     TableManifest.replacePartitions(spark, path, empty, "id", "ep",
-      Seq("e9"), landingParts = Some(Seq("e9")))
+      Seq("e9"), landing = Seq("e9"))
     assert(TableManifest.versions(spark, path) == v0,
       "nothing landed and nothing dropped: no publish")
     assert(epochWorld(path) == (1L to 10L).map(i => (i, "e1", 1.0)))
     TableManifest.replacePartitions(spark, path, empty, "id", "ep",
-      Seq("e1"), landingParts = Some(Seq("e1")))
+      Seq("e1"), landing = Seq("e1"))
     assert(TableManifest.versions(spark, path).last != v0.last)
     assert(TableManifest.load(spark, path).get.count() == 0,
       "an empty replacement of a live partition drops its files")

@@ -38,8 +38,7 @@ class ZOrderSpec extends SparkSpec {
   test("cluster narrows per-file min/max footprints in every dimension") {
     val rows = (for { x <- 0L until 64L; y <- 0L until 64L } yield (x, y))
     val df = rows.toDF("x", "y").repartition(8) // scattered input layout
-    val out = java.nio.file.Files
-      .createTempDirectory("graft-zorder").toString + "/t"
+    val out = tempDir("graft-zorder").toString + "/t"
     ZOrder.cluster(df, Seq("x", "y"), numFiles = 4, bits = 6)
       .write.parquet(out)
     val files = new java.io.File(out).listFiles()

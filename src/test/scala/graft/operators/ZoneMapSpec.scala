@@ -7,7 +7,7 @@ class ZoneMapSpec extends SparkSpec {
   import spark.implicits._
 
   private def writeClustered(n: Long, files: Int): String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-zm-spec")
+    val dir = tempDir("graft-zm-spec")
       .toString + "/t"
     ZoneMap.clusterWrite((0L until n).map(i => (i, i % 7)).toDF("k", "v"),
       "k", files, dir)
@@ -49,7 +49,7 @@ class ZoneMapSpec extends SparkSpec {
 
   test("incremental maintenance: merged per-generation stats prune " +
     "across generations and equal the plain filter") {
-    val base = java.nio.file.Files.createTempDirectory("graft-zm-inc")
+    val base = tempDir("graft-zm-inc")
       .toString
     val gen0 = (0L until 500L).map(i => (i, i % 7)).toDF("k", "v")
     val gen1 = (500L until 1000L).map(i => (i, i % 7)).toDF("k", "v")
@@ -67,7 +67,7 @@ class ZoneMapSpec extends SparkSpec {
 
   test("zone-map paths survive a table dir needing URI escaping " +
     "(space, '%'): stats store decoded names, prunedRead re-reads them") {
-    val base = java.nio.file.Files.createTempDirectory("graft-zm-esc")
+    val base = tempDir("graft-zm-esc")
       .toString
     // a space AND a literal '%' in the table path: input_file_name()
     // URI-encodes both; the stored path must be the literal on-disk name

@@ -5,7 +5,7 @@ import graft.SparkSpec
 class CurationJobSpec extends SparkSpec {
 
   test("curation pipeline: counts are a funnel, curated corpus is written") {
-    val out = java.nio.file.Files.createTempDirectory("graft-cur").toString
+    val out = tempDir("graft-cur").toString
     val c = CurationJob.run(spark,
       "/root/testdata/sf0.001/documents.parquet",
       "/root/testdata/sf0.001/embeddings.parquet",

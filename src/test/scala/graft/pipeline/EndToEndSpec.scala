@@ -13,7 +13,7 @@ import java.nio.file.Files
 class EndToEndSpec extends SparkSpec {
   import spark.implicits._
 
-  private lazy val base = Files.createTempDirectory("graft-e2e").toString
+  private lazy val base = tempDir("graft-e2e").toString
   private lazy val csvPath = {
     val p = s"$base/input.csv"
     val content =
@@ -29,7 +29,7 @@ class EndToEndSpec extends SparkSpec {
   }
 
   test("multi-file ingest: last row in FILE order wins, independent of split sizing") {
-    val dir = Files.createTempDirectory("graft-order").toString
+    val dir = tempDir("graft-order").toString
     Files.createDirectory(java.nio.file.Paths.get(s"$dir/in"))
     val header = "date,state,inpatient_beds,inpatient_beds_used," +
       "total_staffed_adult_icu_beds,staffed_adult_icu_bed_occupancy"
@@ -139,7 +139,7 @@ class EndToEndSpec extends SparkSpec {
 
   test("dim swap crash states: a missing dim is restored from the aside " +
     "copy, a stale aside copy is cleared, and ingest proceeds") {
-    val dir = Files.createTempDirectory("graft-swap").toString
+    val dir = tempDir("graft-swap").toString
     val regions = s"$dir/regions"
     def ingest(runId: String, now: String) =
       IngestJob.run(spark, csvPath, s"$dir/capacity", regions,

@@ -2,7 +2,6 @@ package graft.pipeline
 
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
-import java.nio.file.Files
 
 /** The 100 TB contract for the fact tables: date filters must reach the
   * scan as PartitionFilters over the date-partitioned layout — a query
@@ -12,7 +11,7 @@ class PartitionPruningSpec extends SparkSpec {
   import spark.implicits._
 
   test("P9 date filter prunes date partitions on the metrics table") {
-    val base = Files.createTempDirectory("graft-prune").toString
+    val base = tempDir("graft-prune").toString
     val metrics = Seq(
       ("2024-01-15", "CA", 80.0), ("2024-01-16", "CA", 81.0),
       ("2024-01-17", "CA", 82.0), ("2024-01-16", "TX", 70.0))
@@ -34,7 +33,7 @@ class PartitionPruningSpec extends SparkSpec {
   }
 
   test("incremental metrics derive prunes to the touched date partitions") {
-    val base = Files.createTempDirectory("graft-incr").toString
+    val base = tempDir("graft-incr").toString
     val capacity = Seq(
       ("2024-01-15", "CA", 100, 50), ("2024-01-16", "CA", 100, 60),
       ("2024-01-17", "CA", 100, 70))
@@ -42,7 +41,8 @@ class PartitionPruningSpec extends SparkSpec {
       .withColumn("date", to_date($"date_s")).drop("date_s")
       .withColumn("icu_beds", lit(null).cast("int"))
       .withColumn("icu_occupied", lit(null).cast("int"))
-    graft.sources.Tables.writeDatePartitioned(capacity, s"$base/cap")
+    graft.operators.TableManifest.mergeWriteManifested(spark, s"$base/cap",
+      capacity, Seq("date", "region_id"))
 
     // derive all three days, then "correct" one day and rederive just it
     MetricsJob.runIncremental(spark, s"$base/cap", s"$base/met", "r1",
@@ -51,7 +51,7 @@ class PartitionPruningSpec extends SparkSpec {
     val before = new java.io.File(s"$base/met/date=2024-01-17")
       .listFiles().toSet
 
-    graft.operators.MergeUpsert.mergeWrite(spark, s"$base/cap",
+    graft.operators.TableManifest.mergeWriteManifested(spark, s"$base/cap",
       capacity.filter($"date" === lit("2024-01-16").cast("date"))
         .withColumn("occupied_beds", lit(90)),
       Seq("date", "region_id"))
@@ -72,13 +72,15 @@ class PartitionPruningSpec extends SparkSpec {
   }
 
   test("S7 merge keeps partition layout (rewrite touches only batch dates)") {
-    val base = Files.createTempDirectory("graft-prune2").toString
+    val base = tempDir("graft-prune2").toString
     val init = Seq(("2024-01-15", "CA", 1), ("2024-01-16", "CA", 2))
       .toDF("date", "region_id", "v")
-    graft.operators.MergeUpsert.mergeWrite(spark, s"$base/t", init,
-      Seq("date", "region_id"))
+    graft.operators.TableManifest.mergeWriteManifested(spark, s"$base/t",
+      init, Seq("date", "region_id"))
+    // data dirs only: `_manifest` is the table's own metadata store
     val dirs = new java.io.File(s"$base/t").listFiles()
-      .filter(_.isDirectory).map(_.getName).sorted
+      .filter(f => f.isDirectory && !f.getName.startsWith("_"))
+      .map(_.getName).sorted
     assert(dirs.sameElements(Array("date=2024-01-15", "date=2024-01-16")))
   }
 }

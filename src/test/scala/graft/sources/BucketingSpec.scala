@@ -48,7 +48,7 @@ class BucketingSpec extends SparkSpec {
 
   test("external-path bucketed join: zero Exchange anywhere below the " +
     "join, result equals the plain join, re-register is idempotent") {
-    val base = java.nio.file.Files.createTempDirectory("graft-bkt").toString
+    val base = tempDir("graft-bkt").toString
     val left = (0L until 1000L).map(i => (i, i % 5)).toDF("k", "lv")
     val right = (0L until 400L).map(i => (i * 2, i)).toDF("rk", "rv")
     Bucketing.writeBucketed(left, "bspec_l", Seq("k"), 4, Seq("k"),
@@ -82,7 +82,7 @@ class BucketingSpec extends SparkSpec {
 
   test("mismatched bucket counts still join correctly (degraded, " +
     "never wrong)") {
-    val base = java.nio.file.Files.createTempDirectory("graft-bkt").toString
+    val base = tempDir("graft-bkt").toString
     val l = (0L until 100L).map(i => (i, i)).toDF("k", "lv")
     val r = (0L until 100L).map(i => (i, i * 10)).toDF("rk", "rv")
     Bucketing.writeBucketed(l, "bspec_m4", Seq("k"), 4, Seq("k"),

@@ -12,7 +12,7 @@ class JsonLinesSpec extends SparkSpec {
     StructField("lang", StringType)))
 
   test("jsonl: write/read round-trip, malformed lines to the reject sink") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-jsonl").toString
+    val dir = tempDir("graft-jsonl").toString
     val docs = Seq(
       (1L, "hello world", "en"),
       (2L, "guten tag", "de"),
@@ -41,7 +41,7 @@ class JsonLinesSpec extends SparkSpec {
   }
 
   test("jsonl: schema is enforced, not inferred (extra fields pruned, missing null)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-jsonl2").toString
+    val dir = tempDir("graft-jsonl2").toString
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(s"$dir/in"))
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(s"$dir/in/a.jsonl"),

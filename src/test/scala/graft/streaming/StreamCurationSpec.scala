@@ -19,7 +19,7 @@ class StreamCurationSpec extends SparkSpec {
 
   /** Batch-pipeline output over `docsPath` with the spec's parameters. */
   private def batchCurated(docsPath: String): org.apache.spark.sql.DataFrame = {
-    val out = java.nio.file.Files.createTempDirectory("graft-scb").toString
+    val out = tempDir("graft-scb").toString
     CurationJob.run(spark, docsPath, s"$sfDir/embeddings.parquet",
       s"$out/curated", minQuality = 0.3,
       rates = Map("en" -> 0.8), defaultRate = 0.5)
@@ -38,7 +38,7 @@ class StreamCurationSpec extends SparkSpec {
 
   test("incremental curation converges to the batch pipeline, including " +
     "across a checkpoint restart mid-stream") {
-    val work = java.nio.file.Files.createTempDirectory("graft-scur").toString
+    val work = tempDir("graft-scur").toString
     java.nio.file.Files.createDirectory(java.nio.file.Paths.get(s"$work/in"))
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
     val schema = docs.schema
@@ -79,7 +79,7 @@ class StreamCurationSpec extends SparkSpec {
 
   test("publishEvery-N cadence skips mid-cadence publishes but converges " +
     "to the publishEvery-1 table, including across a restart mid-cadence") {
-    val work = java.nio.file.Files.createTempDirectory("graft-scurN").toString
+    val work = tempDir("graft-scurN").toString
     java.nio.file.Files.createDirectory(java.nio.file.Paths.get(s"$work/in"))
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
     val schema = docs.schema
@@ -125,8 +125,7 @@ class StreamCurationSpec extends SparkSpec {
 
   test("curateBatch surfaces a BACKGROUND store-merge failure as the " +
     "batch's failure (the durability barrier), never silently") {
-    val work = java.nio.file.Files
-      .createTempDirectory("graft-scur-fail").toString + "/cur"
+    val work = tempDir("graft-scur-fail").toString + "/cur"
     java.nio.file.Files.createDirectories(
       java.nio.file.Paths.get(work))
     // the docs-store path pre-exists as a FILE: the background docs
@@ -150,8 +149,7 @@ class StreamCurationSpec extends SparkSpec {
   test("label store equals a from-scratch resolveClusters over the " +
     "accumulated stores, and the curated delta is redelivery-idempotent " +
     "(same batch, same epoch, twice)") {
-    val work = java.nio.file.Files
-      .createTempDirectory("graft-scur-redeliver").toString + "/cur"
+    val work = tempDir("graft-scur-redeliver").toString + "/cur"
     StreamCuration.publishQuantizedEmbeddings(spark, work,
       s"$sfDir/embeddings.parquet")
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
@@ -195,8 +193,7 @@ class StreamCurationSpec extends SparkSpec {
 
   test("compactCurated folds the published epochs into one and retires " +
     "the absorbed deletion vectors without moving the readable table") {
-    val work = java.nio.file.Files
-      .createTempDirectory("graft-scur-compact").toString + "/cur"
+    val work = tempDir("graft-scur-compact").toString + "/cur"
     StreamCuration.publishQuantizedEmbeddings(spark, work,
       s"$sfDir/embeddings.parquet")
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
@@ -233,8 +230,7 @@ class StreamCurationSpec extends SparkSpec {
     "stores and curated table on the same accumulated ranges") {
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
     def run(maxIds: Int): (Set[(Long, Long)], Set[Long]) = {
-      val work = java.nio.file.Files
-        .createTempDirectory(s"graft-scur-cap$maxIds").toString + "/cur"
+      val work = tempDir(s"graft-scur-cap$maxIds").toString + "/cur"
       StreamCuration.publishQuantizedEmbeddings(spark, work,
         s"$sfDir/embeddings.parquet")
       (0 until 3).foreach { k =>
@@ -290,8 +286,7 @@ class StreamCurationSpec extends SparkSpec {
 
   test("curateBatch: an empty micro-batch is a no-op that leaves the " +
     "stores and the curated table converged") {
-    val work = java.nio.file.Files
-      .createTempDirectory("graft-scur-empty").toString + "/cur"
+    val work = tempDir("graft-scur-empty").toString + "/cur"
     StreamCuration.publishQuantized(spark, work,
       graft.operators.Similarity.quantizeInt8(
         spark.read.parquet(s"$sfDir/embeddings.parquet"),
@@ -310,8 +305,7 @@ class StreamCurationSpec extends SparkSpec {
 
   test("maintainCurated (the compactEvery tick) bounds epoch count AND " +
     "on-disk COW backlog across a many-tick run without moving the table") {
-    val work = java.nio.file.Files
-      .createTempDirectory("graft-scur-maint").toString + "/cur"
+    val work = tempDir("graft-scur-maint").toString + "/cur"
     StreamCuration.publishQuantizedEmbeddings(spark, work,
       s"$sfDir/embeddings.parquet")
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
@@ -369,8 +363,7 @@ class StreamCurationSpec extends SparkSpec {
   test("epoch stores: a reused doc_id across epochs keeps ONE row with " +
     "the newest text (the plain keyed store's overwrite contract, carried " +
     "by the manifest key blooms)") {
-    val work = java.nio.file.Files
-      .createTempDirectory("graft-epoch-reuse").toString + "/cur"
+    val work = tempDir("graft-epoch-reuse").toString + "/cur"
     val store = StreamCuration.docsPath(work)
     val s2 = spark; import s2.implicits._
     val b0 = Seq((1L, "old text one"), (2L, "text two"))
@@ -401,8 +394,7 @@ class StreamCurationSpec extends SparkSpec {
 
   test("epoch stores: append-only batches never rewrite old partitions " +
     "(bloom-miss soak — the O(batch) write bar)") {
-    val work = java.nio.file.Files
-      .createTempDirectory("graft-epoch-soak").toString + "/cur"
+    val work = tempDir("graft-epoch-soak").toString + "/cur"
     val store = StreamCuration.docsPath(work)
     val s2 = spark; import s2.implicits._
     def fileSet(): Set[String] = graft.operators.TableManifest
@@ -435,8 +427,7 @@ class StreamCurationSpec extends SparkSpec {
 
   test("curateAvailableNow wires the compactEvery cadence: a drain with " +
     "compactEvery=1 leaves a folded single-epoch manifest") {
-    val work = java.nio.file.Files
-      .createTempDirectory("graft-scur-ce").toString
+    val work = tempDir("graft-scur-ce").toString
     java.nio.file.Files.createDirectory(java.nio.file.Paths.get(s"$work/in"))
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
     arrive(work, docs.filter(col("doc_id") % 2 === 0), "f1.parquet")

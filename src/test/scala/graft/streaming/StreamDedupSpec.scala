@@ -71,7 +71,7 @@ class StreamDedupSpec extends SparkSpec {
   }
 
   private def mkWork(prefix: String): String = {
-    val work = java.nio.file.Files.createTempDirectory(prefix).toString
+    val work = tempDir(prefix).toString
     java.nio.file.Files.createDirectory(
       java.nio.file.Paths.get(s"$work/arrivals"))
     work

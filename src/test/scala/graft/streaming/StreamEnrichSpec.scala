@@ -22,8 +22,7 @@ class StreamEnrichSpec extends SparkSpec {
   }
 
   test("enrichment equals the batch join; unmatched keys survive as null") {
-    val work = java.nio.file.Files
-      .createTempDirectory("graft-enrich-spec").toString
+    val work = tempDir("graft-enrich-spec").toString
     java.nio.file.Files.createDirectory(
       java.nio.file.Paths.get(s"$work/arrivals"))
     writeArrival(work, "b0",
@@ -38,8 +37,7 @@ class StreamEnrichSpec extends SparkSpec {
   }
 
   test("restart with the same checkpoint is exactly-once: old files never re-enrich") {
-    val work = java.nio.file.Files
-      .createTempDirectory("graft-enrich-restart").toString
+    val work = tempDir("graft-enrich-restart").toString
     java.nio.file.Files.createDirectory(
       java.nio.file.Paths.get(s"$work/arrivals"))
     val dim = Seq((10L, "gold")).toDF("k", "tier")

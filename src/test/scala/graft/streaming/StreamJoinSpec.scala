@@ -38,7 +38,7 @@ class StreamJoinSpec extends SparkSpec {
   }
 
   private def mkWork(prefix: String): String = {
-    val work = java.nio.file.Files.createTempDirectory(prefix).toString
+    val work = tempDir(prefix).toString
     Seq("a", "b").foreach(s => java.nio.file.Files
       .createDirectory(java.nio.file.Paths.get(s"$work/$s")))
     work

@@ -6,8 +6,7 @@ import graft.operators.Scd2
 class StreamScd2Spec extends SparkSpec {
   import spark.implicits._
 
-  private def store() = java.nio.file.Files
-    .createTempDirectory("graft-scd2-stream").toString + "/hist"
+  private def store() = tempDir("graft-scd2-stream").toString + "/hist"
 
   private def hist(path: String) =
     StreamScd2.readHistory(spark, path)

@@ -41,8 +41,7 @@ class StreamSessionsSpec extends SparkSpec {
 
   test("sessions merge across micro-batch boundaries; exact-gap event " +
     "breaks; sentinel drains everything and is excluded") {
-    val work = java.nio.file.Files
-      .createTempDirectory("graft-sess-spec").toString
+    val work = tempDir("graft-sess-spec").toString
     // gap = 10s. user 1: events at 0s, 8s (same session — second file!),
     // then 18s which is EXACTLY last+gap → session_window's [start,
     // last+gap) half-open end means 18s still MERGES (8+10=18 touches

@@ -13,8 +13,7 @@ class StreamStatsSpec extends SparkSpec {
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
 
   test("applyBatch maintains counts additively and is idempotent per batch") {
-    val store = java.nio.file.Files
-      .createTempDirectory("graft-svocab").toString + "/v"
+    val store = tempDir("graft-svocab").toString + "/v"
     StreamStats.applyBatch(spark, store,
       Seq("a b a", "B c").toDF("text"), "text", batchId = 0)
     assert(vocabMap(store) == Map("a" -> 2L, "b" -> 2L, "c" -> 1L))
@@ -31,7 +30,7 @@ class StreamStatsSpec extends SparkSpec {
   }
 
   test("streamed vocabulary converges to the batch word count, survives restart") {
-    val work = java.nio.file.Files.createTempDirectory("graft-sv2").toString
+    val work = tempDir("graft-sv2").toString
     java.nio.file.Files.createDirectory(java.nio.file.Paths.get(s"$work/in"))
     val schema = StructType(Seq(StructField("text", StringType)))
     def arrive(texts: Seq[String], name: String): Unit = {
